@@ -14,18 +14,64 @@ import json
 import os
 import sys
 import time
+from dataclasses import dataclass
+from typing import Callable
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO_DIR = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO_DIR)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+WARM_DIR = "/root/testdata/sf0.001"
+DETAIL_PATH = os.path.join(REPO_DIR, "BENCH_DETAIL.json")
 
-# Queries whose plan build trains a model behind a per-sf_dir memo
-# (LR weights / IVF centroids / PQ codebooks). Their timed reps clear
-# the memos first so the bench row includes training (r14 verdict
-# item 2: memo-warm min-of-N under-reported the declared computation).
-TRAINED_QUERIES = frozenset(
-    {"quality_classifier_trained", "pq_recall_trained", "similarity_ivfpq_trained"}
-)
+
+def trained_queries(queries) -> frozenset[str]:
+    """Queries whose plan build trains a model behind a per-sf_dir memo
+    (LR weights / IVF centroids / PQ codebooks): every registry name
+    ending in `_trained`. Their timed reps clear the memos first so the
+    bench row includes training (r14 verdict item 2: memo-warm min-of-N
+    under-reported the declared computation)."""
+    return frozenset(n for n in queries if n.endswith("_trained"))
+
+
+def _run_query(spark, fn, sf_dir: str) -> float:
+    """Wall seconds of one noop-format write of `fn`'s plan at `sf_dir`."""
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def _warm(spark, fn, fallback_dir: str) -> None:
+    """Untimed run at the smallest SF — compiles the whole-stage-codegen
+    for the plan (lambda-heavy dedup plans cost seconds to janino-compile
+    on first execution) so timed runs measure steady-state execution."""
+    _run_query(spark, fn, WARM_DIR if os.path.isdir(WARM_DIR) else fallback_dir)
+
+
+def _best_time(spark, fn, sf_dir: str, cold: bool, reps: int = 2) -> float:
+    """Min wall seconds over up to `reps` runs (one GC pause inside a
+    heavy query's run is why a 3rd rep exists); queries under 1.5 s stop
+    at min-of-2. `cold` clears the model memos before every rep."""
+    from dcafs_spark.queries import clear_training_memos
+
+    best = float("inf")
+    for rep in range(reps):
+        if cold:
+            clear_training_memos()
+        best = min(best, _run_query(spark, fn, sf_dir))
+        if rep == 1 and best < 1.5:  # fast queries: min-of-2 suffices
+            break
+    return best
+
+
+def _sfval(x):
+    """A scale factor as a float where it parses as one: the payload
+    stores sf=float('1')=1.0 while a dir suffix reads '1', so a string
+    compare would silently miss integer SFs."""
+    try:
+        return float(x)
+    except (TypeError, ValueError):
+        return str(x)
 
 
 def _progress_stats(q, warmup_batches: int = 2) -> tuple[list[dict], list[dict]]:
@@ -59,11 +105,11 @@ def _last_state_rows(entries: list[dict]) -> int:
     return 0
 
 
-def _steady_rate(steady: list[dict]) -> tuple[int, float, float]:
-    """(rows, busy_sec, rows/sec) over the steady-state batches."""
+def _steady_rate(steady: list[dict]) -> float:
+    """Rows/sec over the steady-state batches' busy time."""
     rows = sum(e["numInputRows"] for e in steady)
     busy = sum(e["batchDuration"] for e in steady) / 1000.0
-    return rows, busy, (rows / busy if busy > 0 else 0.0)
+    return rows / busy if busy > 0 else 0.0
 
 
 # Every streaming verdict must rest on at least this many steady-state
@@ -74,21 +120,19 @@ def _steady_rate(steady: list[dict]) -> tuple[int, float, float]:
 MIN_STEADY_BATCHES = 3
 
 
-def _run_until_steady(
-    q, seconds: float, min_steady: int = MIN_STEADY_BATCHES
-) -> tuple[list[dict], list[dict]]:
+def _run_until_steady(q, seconds: float) -> tuple[list[dict], list[dict]]:
     """Sleep the nominal window, then AUTO-EXTEND until the query has
-    produced >= min_steady steady-state batches or the hard cap
+    produced >= MIN_STEADY_BATCHES steady-state batches or the hard cap
     (factor x nominal, SPARK_GRAFT_STREAM_MAX_FACTOR, default 2.5) is
     reached. Callers report `insufficient_batches` explicitly when the
-    cap fires first — never a rate derived from <min_steady batches."""
+    cap fires first — never a rate derived from fewer batches."""
     factor = float(os.environ.get("SPARK_GRAFT_STREAM_MAX_FACTOR", "2.5"))
     max_seconds = max(seconds * factor, seconds + 20.0)
     t0 = time.monotonic()
     time.sleep(seconds)
     while True:
         entries, steady = _progress_stats(q)
-        if len(steady) >= min_steady or (time.monotonic() - t0) >= max_seconds:
+        if len(steady) >= MIN_STEADY_BATCHES or (time.monotonic() - t0) >= max_seconds:
             return entries, steady
         time.sleep(min(5.0, max(1.0, seconds / 6.0)))
 
@@ -97,7 +141,7 @@ def _insufficient(entries: list[dict], steady: list[dict]) -> dict:
     """Explicit sub-minimum-batch verdict: report what WAS observed
     (best-effort rate over the partial window) but tagged so no
     kept_up/knee claim is ever derived from it."""
-    rows, busy, rate = _steady_rate(steady)
+    rate = _steady_rate(steady)
     return {
         "err": "insufficient_batches",
         "n_batches": len(steady),
@@ -118,6 +162,27 @@ def _retry_if_missed(run):
         if r2.get("sustained_rows_per_sec", 0) > r.get("sustained_rows_per_sec", 0):
             r = r2
     return r
+
+
+# The reference's label chain (`src/worker/LabelWorker.java:464`:
+# receive → label → forwards) over "$EV,<etype>,<val>,<uid>" lines. The
+# replay bench and both label-path tiers compile this one spec.
+LABEL_PATH = {
+    "delimiter": ",",
+    "steps": [
+        {"type": "filter", "rules": [["start", "$EV"], ["minitems", "4"]]},
+        {"type": "math", "ops": [{"target": "i2", "formula": "i2*0.5"}]},
+        {
+            "type": "generic",
+            "fields": [
+                {"name": "etype", "index": 1, "dtype": "text"},
+                {"name": "val", "index": 2, "dtype": "real"},
+                {"name": "uid", "index": 3, "dtype": "int"},
+            ],
+            "keep": ["ts"],
+        },
+    ],
+}
 
 
 def streaming_lines_per_sec(spark) -> float:
@@ -154,21 +219,7 @@ def streaming_lines_per_sec(spark) -> float:
             sp = StreamingPath(
                 spark,
                 source={"kind": "text", "path": stage_dir + "/*.txt"},
-                path={
-                    "delimiter": ",",
-                    "steps": [
-                        {"type": "filter", "rules": [["start", "$EV"], ["minitems", "4"]]},
-                        {"type": "math", "ops": [{"target": "i2", "formula": "i2*0.5"}]},
-                        {
-                            "type": "generic",
-                            "fields": [
-                                {"name": "etype", "index": 1, "dtype": "text"},
-                                {"name": "val", "index": 2, "dtype": "real"},
-                            ],
-                            "keep": ["ts"],
-                        },
-                    ],
-                },
+                path=LABEL_PATH,
                 sinks=[lambda df, bid: seen.__setitem__("n", seen["n"] + df.count())],
             )
             q = sp.start("bench_stream")
@@ -186,532 +237,340 @@ def streaming_lines_per_sec(spark) -> float:
         shutil.rmtree(stage_dir, ignore_errors=True)
 
 
-def streaming_sustained(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Sustained-rate run of the reference's real workload shape
-    (`src/worker/LabelWorker.java:464`: receive → label → forwards →
-    rtvals store): rate source → line synth → the SAME compiled
-    filter→math→generic path the replay bench uses → per-key running
-    aggregates in the Spark state store (applyInPandasWithState,
-    `streaming/stateful.py`) — a true streaming stateful operator, not
-    a foreachBatch loop. Runs ≥60 s (SPARK_GRAFT_STREAM_SECONDS) at an
-    offered SPARK_GRAFT_STREAM_RPS rows/s and reports steady-state
-    processed rows/s (first progress entries dropped as warmup),
-    whether the pipeline kept up with the offered rate, and the state
-    store row count — which must stay bounded at the key-space size
-    (2000 keys here; state is per-key, not per-row)."""
-    import shutil
-    import tempfile
-
+def _label_path(src):
+    """Synthesized label lines over 2000 (etype, uid) keys → LABEL_PATH."""
     from pyspark.sql import functions as F
 
     from dcafs_spark.plans.dsl import compile_path
+
+    lines = src.select(
+        F.col("timestamp").alias("ts"),
+        F.concat_ws(
+            ",",
+            F.lit("$EV"),
+            F.concat(F.lit("t"), (F.col("value") % 5).cast("string")),
+            ((F.col("value") % 1000) / 7.0).cast("string"),
+            ((F.col("value") / 5).cast("long") % 400).cast("string"),
+        ).alias("value"),
+    )
+    main, _rej = compile_path(lines, LABEL_PATH)
+    return main
+
+
+def _build_stateful(src):
+    """The reference's real workload shape (`LabelWorker.java:464`:
+    receive → label → forwards → rtvals store) with a true streaming
+    stateful operator, not a foreachBatch loop. State must stay bounded
+    at the key-space size (2000 keys; state is per-key, not per-row)."""
+    from pyspark.sql import functions as F
+
     from dcafs_spark.streaming.stateful import stateful_values
 
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_SECONDS", "60"))
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_RPS", "250000"))
-    ckpt = tempfile.mkdtemp(prefix="bench_state_")
-    try:
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rps)
-            .option("numPartitions", 8)
-            .load()
-        )
-        lines = src.select(
-            F.col("timestamp").alias("_rts"),
-            F.concat_ws(
-                ",",
-                F.lit("$EV"),
-                F.concat(F.lit("t"), (F.col("value") % 5).cast("string")),
-                ((F.col("value") % 1000) / 7.0).cast("string"),
-                ((F.col("value") / 5).cast("long") % 400).cast("string"),
-            ).alias("value"),
-        )
-        main, _rej = compile_path(
-            lines,
-            {
-                "delimiter": ",",
-                "steps": [
-                    {"type": "filter", "rules": [["start", "$EV"], ["minitems", "4"]]},
-                    {"type": "math", "ops": [{"target": "i2", "formula": "i2*0.5"}]},
-                    {
-                        "type": "generic",
-                        "fields": [
-                            {"name": "etype", "index": 1, "dtype": "text"},
-                            {"name": "val", "index": 2, "dtype": "real"},
-                            {"name": "uid", "index": 3, "dtype": "int"},
-                        ],
-                        "keep": ["_rts"],
-                    },
-                ],
-            },
-        )
-        keyed = main.select(
-            "etype",
-            F.col("uid").cast("string").alias("uid"),
-            "val",
-            F.col("_rts").cast("double").alias("tsd"),
-        )
-        out = stateful_values(
-            keyed, history_n=10, group="etype", name="uid", value="val", ts="tsd"
-        )
-        q = (
-            out.writeStream.outputMode("update")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .queryName("bench_sustained")
-            .start()
-        )
-        try:
-            entries, steady = _run_until_steady(q, seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(15)
-        if len(steady) < MIN_STEADY_BATCHES:
-            return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
-        state_rows = _last_state_rows(entries)
-        # micro-batch time breakdown (mean ms per steady batch) — names
-        # the bottleneck when a rate stops keeping up: addBatch is the
-        # state-store + Python-state-fn execution, getBatch/latestOffset
-        # are source-side, walCommit/commitOffsets are checkpoint I/O
-        durs: dict[str, float] = {}
-        for e in steady:
-            for k, v in (e.get("durationMs") or {}).items():
-                durs[k] = durs.get(k, 0.0) + float(v)
-        durs = {k: round(v / len(steady), 1) for k, v in durs.items()}
-        return {
-            "sustained_rows_per_sec": round(rate, 1),
-            "offered_rows_per_sec": rps,
-            "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": int(state_rows),
-            "state_bounded": bool(state_rows <= 2000),
-            # busy_sec = sum of batchDuration over RETAINED progress
-            # entries (recentProgress keeps only the newest ~100), i.e.
-            # micro-batch busy time over that window — NOT wall-clock
-            # run time; rows/rate above are computed over the same window
-            "busy_sec": round(sum(e["batchDuration"] for e in entries) / 1000.0, 1),
-            "n_batches": len(steady),
-            "durations_ms": durs,
-        }
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    keyed = _label_path(src).select(
+        "etype",
+        F.col("uid").cast("string").alias("uid"),
+        "val",
+        F.col("ts").cast("double").alias("tsd"),
+    )
+    return stateful_values(
+        keyed, history_n=10, group="etype", name="uid", value="val", ts="tsd"
+    )
 
 
-def streaming_sustained_jvm(spark, rps: int | None = None, seconds: float | None = None) -> dict:
+def _build_jvm_window(src):
     """Bottleneck-attribution control for the capacity knee: the SAME
-    rate source → line synth → compiled filter→math→generic path as
-    `streaming_sustained`, but the stateful stage is a pure-JVM
-    watermarked windowed aggregation (10 s tumbling window per
-    (etype, uid): count/avg/max) instead of the Python
-    applyInPandasWithState store. If this variant keeps up at the rate
-    where the Python path fails, the knee is the Arrow round-trip +
-    Python state function, not the engine's state store or the
-    filter/math/projection pipeline."""
-    import shutil
-    import tempfile
-
+    label path as the stateful tier, but a pure-JVM windowed aggregation
+    instead of the Python applyInPandasWithState store. If this variant
+    keeps up at the rate where the Python path fails, the knee is the
+    Arrow round-trip + Python state function, not the engine's state
+    store or the filter/math/projection pipeline."""
     from pyspark.sql import functions as F
 
-    from dcafs_spark.plans.dsl import compile_path
-
-    # 60 s default (was 30): at 1 M offered the windowed-agg batches
-    # run 15-20 s each, so a 30 s window leaves exactly 3 part-ramping
-    # steady batches and reads ~20% low (measured r13: 600k@30s vs
-    # 736k@60s, same code, idle box). The fresh-subprocess design
-    # makes the longer window affordable.
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_JVM_SECONDS", "60"))
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_JVM_RPS", "1000000"))
-    if rps <= 0:
-        return {}
-    ckpt = tempfile.mkdtemp(prefix="bench_state_jvm_")
-    try:
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rps)
-            .option("numPartitions", 8)
-            .load()
+    return (
+        _label_path(src)
+        .withWatermark("ts", "10 seconds")
+        .groupBy(F.window("ts", "10 seconds"), "etype", "uid")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.avg("val").alias("avg_val"),
+            F.max("val").alias("max_val"),
         )
-        lines = src.select(
-            F.col("timestamp").alias("_rts"),
-            F.concat_ws(
-                ",",
-                F.lit("$EV"),
-                F.concat(F.lit("t"), (F.col("value") % 5).cast("string")),
-                ((F.col("value") % 1000) / 7.0).cast("string"),
-                ((F.col("value") / 5).cast("long") % 400).cast("string"),
-            ).alias("value"),
-        )
-        main, _rej = compile_path(
-            lines,
-            {
-                "delimiter": ",",
-                "steps": [
-                    {"type": "filter", "rules": [["start", "$EV"], ["minitems", "4"]]},
-                    {"type": "math", "ops": [{"target": "i2", "formula": "i2*0.5"}]},
-                    {
-                        "type": "generic",
-                        "fields": [
-                            {"name": "etype", "index": 1, "dtype": "text"},
-                            {"name": "val", "index": 2, "dtype": "real"},
-                            {"name": "uid", "index": 3, "dtype": "int"},
-                        ],
-                        "keep": ["_rts"],
-                    },
-                ],
-            },
-        )
-        out = (
-            main.withWatermark("_rts", "10 seconds")
-            .groupBy(F.window("_rts", "10 seconds"), "etype", "uid")
-            .agg(F.count(F.lit(1)).alias("n"), F.avg("val").alias("avg_val"), F.max("val").alias("max_val"))
-        )
-        q = (
-            out.writeStream.outputMode("update")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .queryName("bench_sustained_jvm")
-            .start()
-        )
-        try:
-            entries, steady = _run_until_steady(q, seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(15)
-        if len(steady) < MIN_STEADY_BATCHES:
-            return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
-        return {
-            "sustained_rows_per_sec": round(rate, 1),
-            "offered_rows_per_sec": rps,
-            "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": _last_state_rows(entries),
-            "n_batches": len(steady),
-        }
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    )
 
 
-def streaming_dedup_sustained(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Sustained run of the banded-signature ingest dedup tier
-    (`streaming/dedup.py:streaming_minhash_bucket_dedup`): rate source
-    → synthesized ~12-word docs drawn from a bounded phrase space (so
-    mirror floods actually occur and the state store does real
-    first-wins work) → watermarked dropDuplicatesWithinWatermark on the
-    full banded signature → noop sink. The per-row cost here is the
-    map-side minhash fold (16 hashes over shingles), the heaviest
-    per-document expression in the streaming surface — this measures
-    the dedup tier's own keep-up rate, separate from the
-    filter→math→generic sustained run."""
-    import shutil
-    import tempfile
-
+def _build_minhash_dedup(src):
+    """Banded-signature ingest dedup tier. Docs come from a bounded
+    phrase space so mirror floods actually occur and the state store
+    does real first-wins work. The per-row cost is the map-side minhash
+    fold (16 hashes over shingles)."""
     from pyspark.sql import functions as F
 
     from dcafs_spark.streaming.dedup import streaming_minhash_bucket_dedup
 
-    # ~1400 docs/s/core offered (45k on the 32-core driver box; was a
-    # flat 30k through round 9): the old 8-partition rate source capped
-    # the map-side signature stage at 8 cores — the tier capability
-    # read 28-48k and flapped with JVM pressure. A real ingest at these
-    # rates has source partitions >= cores (Kafka), and at 32/32 the
-    # measured capability is ~85k docs/s (~2.7k/core; keeps up at 60k,
-    # knee ~85k), so 1400/core ≈ 2x headroom even under end-of-bench
-    # JVM pressure — and the default scales with the actual core count
-    # instead of assuming this box.
-    cores = spark.sparkContext.defaultParallelism or 32
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_RPS", str(1400 * cores)))
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SECONDS", "30"))
-    if rps <= 0:
-        return {}
-    ckpt = tempfile.mkdtemp(prefix="bench_dedup_state_")
-    try:
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rps)
-            .option("numPartitions", cores)
-            .load()
-        )
-        # ~2000 distinct phrases of 12 words → heavy duplication within
-        # the watermark horizon, the flood the tier exists to absorb
-        docs = src.select(
-            "timestamp",
-            F.expr(
-                "concat_ws(' ', transform(sequence(0, 11),"
-                " i -> concat('tok', ((value % 2000) * 13 + i * i) % 997)))"
-            ).alias("text"),
-        )
-        dd = streaming_minhash_bucket_dedup(
-            docs, text_col="text", ts_col="timestamp", watermark="10 seconds"
-        )
-        q = (
-            dd.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .queryName("bench_dedup_tier")
-            .start()
-        )
-        try:
-            entries, steady = _run_until_steady(q, seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(15)
-        if len(steady) < MIN_STEADY_BATCHES:
-            return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
-        state_rows = _last_state_rows(entries)
-        durs: dict[str, float] = {}
-        for e in steady:
-            for k, v in (e.get("durationMs") or {}).items():
-                durs[k] = durs.get(k, 0.0) + float(v)
-        durs = {k: round(v / len(steady), 1) for k, v in durs.items()}
-        return {
-            "sustained_rows_per_sec": round(rate, 1),
-            "offered_rows_per_sec": rps,
-            "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": int(state_rows),
-            "n_batches": len(steady),
-            "durations_ms": durs,
-        }
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # ~2000 distinct phrases of 12 words → heavy duplication within
+    # the watermark horizon, the flood the tier exists to absorb
+    docs = src.select(
+        "timestamp",
+        F.expr(
+            "concat_ws(' ', transform(sequence(0, 11),"
+            " i -> concat('tok', ((value % 2000) * 13 + i * i) % 997)))"
+        ).alias("text"),
+    )
+    return streaming_minhash_bucket_dedup(
+        docs, text_col="text", ts_col="timestamp", watermark="10 seconds"
+    )
 
 
-def streaming_embedding_dedup_sustained(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Sustained run of the embedding-bucket ingest dedup tier
-    (`streaming/dedup.py:streaming_embedding_bucket_dedup`): rate
-    source → synthesized 64-dim vectors from a bounded family (so
-    re-encoded mirror floods occur and first-wins does real work) →
-    sign-LSH bucket (12 planes ≈ ⌈log2 500⌉ + 3) + watermarked
-    dropDuplicatesWithinWatermark → noop. Per-row cost is the H×dim
-    bucket fold (~768 mults) — heavier than the minhash tier's
-    shingle fold, so the default offer is lower (800 docs/s/core vs
-    1400). Fresh-process knee since the r12 lsh_bucket rewrite:
-    keeps up through 153.6k docs/s (4.8k/core), breaks at 204.8k
-    (194.6k sustained)."""
-    import shutil
-    import tempfile
-
+def _build_embedding_dedup(src):
+    """Embedding-bucket ingest dedup tier: 64-dim vectors from a bounded
+    family (so re-encoded mirror floods occur), sign-LSH bucketed with
+    12 planes ≈ ⌈log2 500⌉ + 3. Per-row cost is the H×dim bucket fold
+    (~768 mults) — heavier than the minhash tier's shingle fold."""
     from pyspark.sql import functions as F
 
     from dcafs_spark.operators.similarity import hyperplanes
     from dcafs_spark.streaming.dedup import streaming_embedding_bucket_dedup
 
-    cores = spark.sparkContext.defaultParallelism or 32
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_EMBDEDUP_RPS", str(800 * cores)))
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SECONDS", "30"))
-    if rps <= 0:
-        return {}
-    ckpt = tempfile.mkdtemp(prefix="bench_embdedup_state_")
-    try:
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rps)
-            .option("numPartitions", cores)
-            .load()
-        )
-        # 500 distinct base vectors → heavy mirror duplication within
-        # the horizon; per-row jitter stays far below a sign flip
-        vecs = src.select(
-            "timestamp",
-            F.expr(
-                "transform(sequence(0, 63),"
-                " i -> cos(double(value % 500) * 7.0 + double(i) * 1.3)"
-                "      + double(value % 7) * 1e-9)"
-            ).alias("embedding"),
-        )
-        dd = streaming_embedding_bucket_dedup(
-            vecs, hyperplanes(64, 12, 42), ts_col="timestamp", watermark="10 seconds"
-        )
-        q = (
-            dd.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .queryName("bench_embdedup_tier")
-            .start()
-        )
-        try:
-            entries, steady = _run_until_steady(q, seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(15)
-        if len(steady) < MIN_STEADY_BATCHES:
-            return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
-        state_rows = _last_state_rows(entries)
-        durs: dict[str, float] = {}
-        for e in steady:
-            for k, v in (e.get("durationMs") or {}).items():
-                durs[k] = durs.get(k, 0.0) + float(v)
-        durs = {k: round(v / len(steady), 1) for k, v in durs.items()}
-        return {
-            "sustained_rows_per_sec": round(rate, 1),
-            "offered_rows_per_sec": rps,
-            "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": int(state_rows),
-            "n_batches": len(steady),
-            "durations_ms": durs,
-        }
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # 500 distinct base vectors → heavy mirror duplication within
+    # the horizon; per-row jitter stays far below a sign flip
+    vecs = src.select(
+        "timestamp",
+        F.expr(
+            "transform(sequence(0, 63),"
+            " i -> cos(double(value % 500) * 7.0 + double(i) * 1.3)"
+            "      + double(value % 7) * 1e-9)"
+        ).alias("embedding"),
+    )
+    return streaming_embedding_bucket_dedup(
+        vecs, hyperplanes(64, 12, 42), ts_col="timestamp", watermark="10 seconds"
+    )
 
 
-def streaming_url_dedup_sustained(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Sustained run of the canonical-URL ingest dedup tier
-    (`streaming/dedup.py:streaming_url_dedup`, r12 verdict ask #5):
-    rate source → synthesized raw URLs with the batch fixture's
-    variant structure (case/www/port/utm/fragment spellings of ~2000
-    page identities, so re-fetch floods actually occur) → watermarked
-    first-wins on the canonical md5 → noop. Per-row cost is the
-    canonicalization regexp chain — lighter than the minhash fold, so
-    the default offer sits higher (2000 docs/s/core = 64k on this
-    box). Idle fresh-process sweep (r13): keeps up at EVERY measured
-    rung through 1.5M docs/s (46.9k/core, addBatch 1.5 s/batch) —
-    the tier rides the engine's raw micro-batch ceiling, not its own
-    expression cost; the modest default exists for in-suite co-load
-    robustness only."""
-    import shutil
-    import tempfile
-
+def _build_url_dedup(src):
+    """Canonical-URL ingest dedup tier (r12 verdict ask #5): raw URLs
+    with the batch fixture's variant structure, so re-fetch floods
+    actually occur. Per-row cost is the canonicalization regexp chain —
+    lighter than the minhash fold."""
     from pyspark.sql import functions as F
 
     from dcafs_spark.streaming.dedup import streaming_url_dedup
 
-    cores = spark.sparkContext.defaultParallelism or 32
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_URLDEDUP_RPS", str(2000 * cores)))
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SECONDS", "30"))
-    if rps <= 0:
-        return {}
-    ckpt = tempfile.mkdtemp(prefix="bench_urldedup_state_")
-    try:
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rps)
-            .option("numPartitions", cores)
-            .load()
-        )
-        # ~2000 page identities; spelling variants ride value % 4
-        urls = src.select(
-            "timestamp",
-            F.expr(
-                "concat("
-                " CASE WHEN value % 4 = 0 THEN 'HTTPS://WWW.' ELSE 'https://' END,"
-                " 'site', CAST(value % 50 AS STRING), '.example.com',"
-                " CASE WHEN value % 4 = 1 THEN ':443' ELSE '' END,"
-                " '/p/', CAST((value % 2000) DIV 50 AS STRING),"
-                " CASE WHEN value % 4 = 2 THEN '/?utm_source=feed' ELSE '' END,"
-                " CASE WHEN value % 4 = 3 THEN '#frag' ELSE '' END)"
-            ).alias("url"),
-        )
-        dd = streaming_url_dedup(
-            urls, url_col="url", ts_col="timestamp", watermark="10 seconds"
-        )
-        q = (
-            dd.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .queryName("bench_urldedup_tier")
-            .start()
-        )
-        try:
-            entries, steady = _run_until_steady(q, seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(15)
-        if len(steady) < MIN_STEADY_BATCHES:
-            return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
-        state_rows = _last_state_rows(entries)
-        durs: dict[str, float] = {}
-        for e in steady:
-            for k, v in (e.get("durationMs") or {}).items():
-                durs[k] = durs.get(k, 0.0) + float(v)
-        durs = {k: round(v / len(steady), 1) for k, v in durs.items()}
-        return {
-            "sustained_rows_per_sec": round(rate, 1),
-            "offered_rows_per_sec": rps,
-            "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": int(state_rows),
-            "n_batches": len(steady),
-            "durations_ms": durs,
-        }
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # ~2000 page identities; spelling variants ride value % 4
+    urls = src.select(
+        "timestamp",
+        F.expr(
+            "concat("
+            " CASE WHEN value % 4 = 0 THEN 'HTTPS://WWW.' ELSE 'https://' END,"
+            " 'site', CAST(value % 50 AS STRING), '.example.com',"
+            " CASE WHEN value % 4 = 1 THEN ':443' ELSE '' END,"
+            " '/p/', CAST((value % 2000) DIV 50 AS STRING),"
+            " CASE WHEN value % 4 = 2 THEN '/?utm_source=feed' ELSE '' END,"
+            " CASE WHEN value % 4 = 3 THEN '#frag' ELSE '' END)"
+        ).alias("url"),
+    )
+    return streaming_url_dedup(urls, url_col="url", ts_col="timestamp", watermark="10 seconds")
 
 
-def streaming_paragraph_dedup_sustained(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Sustained run of the paragraph ingest dedup tier
-    (`streaming/dedup.py:streaming_paragraph_dedup`, r12 verdict ask
-    #5): rate source → synthesized 3-paragraph docs from a bounded
-    phrase space (template floods occur, novel tails pass) → explode
-    to paragraphs + watermarked first-wins on the 60-bit chash → noop.
-    Per-row cost is normalize + split + 3 md5 chunk hashes and a 3x
-    row expansion — the heaviest of the ingest tiers. Idle
-    fresh-process sweep (r13): keeps up through 96k docs/s (3k/core,
-    91.8k sustained = 95.6% of offered), capability plateaus at
-    ~99-101k with the knee between 96k and 128k (addBatch
-    8.9 s/batch at 128k — chunk-hash fold + state commit). The
-    default offer is 500/core (16k here) for in-suite co-load
-    headroom, the same capability-vs-keep-up split the minhash tier
-    uses. Rates are DOCS offered/s; the reported sustained rate is
-    docs/s (input rows), not exploded paragraph rows."""
-    import shutil
-    import tempfile
-
+def _build_paragraph_dedup(src):
+    """Paragraph ingest dedup tier (r12 verdict ask #5). Per-row cost is
+    normalize + split + 3 md5 chunk hashes and a 3x row expansion — the
+    heaviest of the ingest tiers. Rates are DOCS offered/s; the reported
+    sustained rate is docs/s (input rows), not exploded paragraph rows."""
     from pyspark.sql import functions as F
 
     from dcafs_spark.streaming.dedup import streaming_paragraph_dedup
 
-    cores = spark.sparkContext.defaultParallelism or 32
+    # 3 paragraphs x 20 words: one boilerplate paragraph shared by
+    # value%7==0 docs (the template flood), two from a ~3000-phrase
+    # space (dups within the horizon, novel content dominates)
+    docs = src.select(
+        "timestamp",
+        F.expr(
+            "concat_ws(' ',"
+            " CASE WHEN value % 7 = 0"
+            "   THEN concat_ws(' ', transform(sequence(0, 19), i -> concat('boil', i)))"
+            "   ELSE concat_ws(' ', transform(sequence(0, 19),"
+            "        i -> concat('tok', ((value % 3000) * 17 + i) % 1009))) END,"
+            " concat_ws(' ', transform(sequence(0, 19),"
+            "      i -> concat('mid', ((value % 3000) * 29 + i * i) % 1013))),"
+            " concat_ws(' ', transform(sequence(0, 19),"
+            "      i -> concat('end', ((value % 3000) * 31 + i * 7) % 1019))))"
+        ).alias("text"),
+    )
+    return streaming_paragraph_dedup(
+        docs, text_col="text", chunk_words=20, ts_col="timestamp", watermark="10 seconds"
+    )
+
+
+@dataclass(frozen=True)
+class Tier:
+    """One rate-source streaming tier. Only `build` differs in kind
+    between tiers; `_run_tier` does everything else the same way."""
+
+    section: str  # payload key, also the streaming query's name
+    rate_env: str
+    rate: int  # default offered rows/s (per core when per_core)
+    per_core: bool
+    seconds_env: str
+    seconds: float  # default window before the steady-batch auto-extend
+    partitions: int | None  # rate-source partitions; None = one per core
+    build: Callable  # rate-source DataFrame -> streaming DataFrame
+    mode: str  # output mode
+    state_bound: int | None = None  # reported as `state_bounded` when set
+    knee_note: str = ""  # what an addBatch-dominated knee means here
+
+
+TIERS: dict[str, Tier] = {
+    t.section: t
+    for t in (
+        # section, rate env, rate, per core, seconds env, seconds,
+        # source partitions, build, output mode
+        Tier("streaming_sustained", "SPARK_GRAFT_STREAM_RPS", 250_000, False,
+             "SPARK_GRAFT_STREAM_SECONDS", 60, 8, _build_stateful, "update",
+             state_bound=2000, knee_note=" — state-store + Python state fn"),
+        # 60 s default (was 30): at 1 M offered the windowed-agg batches
+        # run 15-20 s each, so a 30 s window leaves exactly 3 part-ramping
+        # steady batches and reads ~20% low (measured r13: 600k@30s vs
+        # 736k@60s, same code, idle box). The fresh-subprocess design
+        # makes the longer window affordable.
+        Tier("streaming_sustained_jvm", "SPARK_GRAFT_STREAM_JVM_RPS", 1_000_000, False,
+             "SPARK_GRAFT_STREAM_JVM_SECONDS", 60, 8, _build_jvm_window, "update"),
+        # ~1400 docs/s/core offered (45k on the 32-core driver box; was a
+        # flat 30k through round 9): the old 8-partition rate source capped
+        # the map-side signature stage at 8 cores — the tier capability
+        # read 28-48k and flapped with JVM pressure. A real ingest at these
+        # rates has source partitions >= cores (Kafka), and at 32/32 the
+        # measured capability is ~85k docs/s (~2.7k/core; keeps up at 60k,
+        # knee ~85k), so 1400/core ≈ 2x headroom even under end-of-bench
+        # JVM pressure — and the default scales with the actual core count
+        # instead of assuming this box.
+        Tier("streaming_dedup_tier", "SPARK_GRAFT_STREAM_DEDUP_RPS", 1400, True,
+             "SPARK_GRAFT_STREAM_DEDUP_SECONDS", 30, None, _build_minhash_dedup, "append",
+             knee_note=" — map-side minhash fold + state-store commit"),
+        # 800 docs/s/core: the bucket fold is heavier than the minhash
+        # tier's, so the default offer sits lower than its 1400. Fresh-
+        # process knee since the r12 lsh_bucket rewrite: keeps up
+        # through 153.6k docs/s (4.8k/core), breaks at 204.8k (194.6k
+        # sustained).
+        Tier("streaming_embedding_dedup_tier", "SPARK_GRAFT_STREAM_EMBDEDUP_RPS", 800, True,
+             "SPARK_GRAFT_STREAM_DEDUP_SECONDS", 30, None, _build_embedding_dedup, "append",
+             knee_note=" — sign-LSH bucket fold + state-store commit"),
+        # 2000 docs/s/core (64k on the 32-core box). Idle fresh-process
+        # sweep (r13): keeps up at EVERY measured rung through 1.5M
+        # docs/s (46.9k/core, addBatch 1.5 s/batch) — the tier rides the
+        # engine's raw micro-batch ceiling, not its own expression cost;
+        # the modest default exists for in-suite co-load robustness only.
+        Tier("streaming_url_dedup_tier", "SPARK_GRAFT_STREAM_URLDEDUP_RPS", 2000, True,
+             "SPARK_GRAFT_STREAM_DEDUP_SECONDS", 30, None, _build_url_dedup, "append"),
+        # 500 docs/s/core (16k on the 32-core box) for in-suite co-load
+        # headroom, the same capability-vs-keep-up split the minhash tier
+        # uses. Idle fresh-process sweep (r13): keeps up through 96k
+        # docs/s (3k/core, 91.8k sustained = 95.6% of offered),
+        # capability plateaus at ~99-101k with the knee between 96k and
+        # 128k (addBatch 8.9 s/batch at 128k — chunk-hash fold + state
+        # commit).
+        Tier("streaming_paragraph_dedup_tier", "SPARK_GRAFT_STREAM_PARADEDUP_RPS", 500, True,
+             "SPARK_GRAFT_STREAM_DEDUP_SECONDS", 30, None, _build_paragraph_dedup, "append"),
+    )
+}
+
+# Capacity sweeps: section -> (tier, rates env, default rates in the
+# tier's rate unit, seconds env, seconds per rate). Each runs in a
+# FRESH process (see _isolated): measured in-suite after ~20 min of
+# accumulated JVM/GC pressure, the minhash sweep read every rung
+# failing with addBatch 5x its fresh-session time — the same
+# end-of-session artifact class drift_recheck adjudicates for batch
+# queries, so a knee, a CAPABILITY metric, is measured in a clean JVM
+# and reported with `isolated: true`. The in-suite keep-up tiers stay
+# in-suite (they measure the tier in realistic co-load).
+SWEEPS: dict[str, tuple] = {
+    # above the stateful tier's sustained-run baseline
+    "streaming_capacity": (
+        TIERS["streaming_sustained"], "SPARK_GRAFT_STREAM_SWEEP", (500_000, 1_000_000),
+        "SPARK_GRAFT_STREAM_SWEEP_SECONDS", 30,
+    ),
+    # r10 verdict ask #7. 60k/120k/160k/200k at 32 cores. Clean-JVM
+    # measurements (r11): keeps up at 60k (66.0k), 120k (114.1k) and
+    # 160k (160.8k ≈ 5000 docs/s/core), breaks at 200k (169.6k
+    # sustained, addBatch 5.3 s/batch) — the knee is between 160k and
+    # 200k. Runs must be ≥45 s: the first 2-3 batches compile the
+    # minhash codegen at 7-8 s/batch and are dropped as warmup, so a
+    # 25 s run leaves a single still-ramping steady batch and reads 2x
+    # low.
+    "streaming_dedup_capacity": (
+        TIERS["streaming_dedup_tier"], "SPARK_GRAFT_STREAM_DEDUP_SWEEP", (1875, 3750, 5000, 6250),
+        "SPARK_GRAFT_STREAM_DEDUP_SWEEP_SECONDS", 45,
+    ),
+    # above the embedding tier's 800/core keep-up default
+    "streaming_embedding_dedup_capacity": (
+        TIERS["streaming_embedding_dedup_tier"], "SPARK_GRAFT_STREAM_EMBDEDUP_SWEEP",
+        (1600, 3200, 4800, 6400), "SPARK_GRAFT_STREAM_DEDUP_SWEEP_SECONDS", 45,
+    ),
+}
+
+# Every streaming section of the payload, in payload order, with its
+# short name in the final line's `streams` map.
+STREAM_SHORT = {
+    "streaming_sustained": "sustained",
+    "streaming_capacity": "capacity",
+    "streaming_sustained_jvm": "jvm",
+    "streaming_dedup_tier": "dedup",
+    "streaming_embedding_dedup_tier": "embdedup",
+    "streaming_url_dedup_tier": "urldedup",
+    "streaming_paragraph_dedup_tier": "paradedup",
+    "streaming_dedup_capacity": "dedup_capacity",
+}
+
+
+def _cores(spark) -> int:
+    return spark.sparkContext.defaultParallelism or 32
+
+
+def _mean_durations(steady: list[dict]) -> dict[str, float]:
+    """Micro-batch time breakdown (mean ms per steady batch) — names
+    the bottleneck when a rate stops keeping up: addBatch is the
+    operator's execution (state store, Python state fn, signature
+    fold), getBatch/latestOffset are source-side, walCommit/
+    commitOffsets are checkpoint I/O."""
+    durs: dict[str, float] = {}
+    for e in steady:
+        for k, v in (e.get("durationMs") or {}).items():
+            durs[k] = durs.get(k, 0.0) + float(v)
+    return {k: round(v / len(steady), 1) for k, v in durs.items()}
+
+
+def _run_tier(spark, tier: Tier, rps: int | None = None, seconds: float | None = None) -> dict:
+    """Run one tier: rate source → `tier.build` → noop sink at an
+    offered `rps` rows/s for `seconds` (auto-extended until there are
+    MIN_STEADY_BATCHES steady batches). Reports steady-state processed
+    rows/s (the first progress entries dropped as warmup), whether the
+    tier kept up with the offered rate (≥95%), the state store row
+    count and the mean durationMs phases. `rps` and `seconds` default
+    to the tier's env vars; an offer ≤ 0 disables the tier."""
+    import shutil
+    import tempfile
+
     if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_PARADEDUP_RPS", str(500 * cores)))
+        default = tier.rate * _cores(spark) if tier.per_core else tier.rate
+        rps = int(os.environ.get(tier.rate_env, str(default)))
     if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SECONDS", "30"))
+        seconds = float(os.environ.get(tier.seconds_env, str(tier.seconds)))
     if rps <= 0:
         return {}
-    ckpt = tempfile.mkdtemp(prefix="bench_paradedup_state_")
+    ckpt = tempfile.mkdtemp(prefix=f"bench_{tier.section}_")
     try:
         src = (
             spark.readStream.format("rate")
             .option("rowsPerSecond", rps)
-            .option("numPartitions", cores)
+            .option("numPartitions", tier.partitions or _cores(spark))
             .load()
         )
-        # 3 paragraphs x 20 words: one boilerplate paragraph shared by
-        # value%7==0 docs (the template flood), two from a ~3000-phrase
-        # space (dups within the horizon, novel content dominates)
-        docs = src.select(
-            "timestamp",
-            F.expr(
-                "concat_ws(' ',"
-                " CASE WHEN value % 7 = 0"
-                "   THEN concat_ws(' ', transform(sequence(0, 19), i -> concat('boil', i)))"
-                "   ELSE concat_ws(' ', transform(sequence(0, 19),"
-                "        i -> concat('tok', ((value % 3000) * 17 + i) % 1009))) END,"
-                " concat_ws(' ', transform(sequence(0, 19),"
-                "      i -> concat('mid', ((value % 3000) * 29 + i * i) % 1013))),"
-                " concat_ws(' ', transform(sequence(0, 19),"
-                "      i -> concat('end', ((value % 3000) * 31 + i * 7) % 1019))))"
-            ).alias("text"),
-        )
-        dd = streaming_paragraph_dedup(
-            docs, text_col="text", chunk_words=20, ts_col="timestamp", watermark="10 seconds"
-        )
         q = (
-            dd.writeStream.outputMode("append")
+            tier.build(src)
+            .writeStream.outputMode(tier.mode)
             .format("noop")
             .option("checkpointLocation", ckpt)
-            .queryName("bench_paradedup_tier")
+            .queryName(tier.section)
             .start()
         )
         try:
@@ -721,67 +580,50 @@ def streaming_paragraph_dedup_sustained(spark, rps: int | None = None, seconds: 
             q.awaitTermination(15)
         if len(steady) < MIN_STEADY_BATCHES:
             return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
+        rate = _steady_rate(steady)
         state_rows = _last_state_rows(entries)
-        durs: dict[str, float] = {}
-        for e in steady:
-            for k, v in (e.get("durationMs") or {}).items():
-                durs[k] = durs.get(k, 0.0) + float(v)
-        durs = {k: round(v / len(steady), 1) for k, v in durs.items()}
-        return {
+        out = {
             "sustained_rows_per_sec": round(rate, 1),
             "offered_rows_per_sec": rps,
             "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": int(state_rows),
-            "n_batches": len(steady),
-            "durations_ms": durs,
+            "state_rows": state_rows,
         }
+        if tier.state_bound is not None:
+            out["state_bounded"] = state_rows <= tier.state_bound
+        # busy_sec = sum of batchDuration over RETAINED progress
+        # entries (recentProgress keeps only the newest ~100), i.e.
+        # micro-batch busy time over that window — NOT wall-clock
+        # run time; rows/rate above are computed over the same window
+        out["busy_sec"] = round(sum(e["batchDuration"] for e in entries) / 1000.0, 1)
+        out["n_batches"] = len(steady)
+        out["durations_ms"] = _mean_durations(steady)
+        return out
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def streaming_dedup_capacity(spark) -> dict:
-    """Measured knee for the ingest-dedup tier (r10 verdict ask #7):
-    sweep offered docs/s ABOVE the keep-up default until the tier
-    stops keeping up, and name the dominant micro-batch component at
-    the first failing offer. COVERAGE documents ~85k docs/s capability
-    at cores-many source partitions on the 32-core box; the default
-    sweep (60k, 90k, 120k) brackets that claim so the tier has a
-    measured knee like the label path does. Rates scale with the
-    actual core count via SPARK_GRAFT_STREAM_DEDUP_SWEEP; empty
-    disables.
-
-    Run via `bench.py --stream-dedup` in a FRESH process by main():
-    measured in-suite (after ~20 min of accumulated JVM/GC pressure)
-    the same sweep reads every rung failing with addBatch 5x its
-    fresh-session time — the same end-of-session artifact class
-    drift_recheck adjudicates for batch queries, so the knee, a
-    CAPABILITY metric, is measured in a clean JVM and reported with
-    `isolated: true`. The in-suite streaming_dedup_tier keep-up run
-    stays in-suite (it measures the tier in realistic co-load)."""
-    cores = spark.sparkContext.defaultParallelism or 32
-    # 60k/120k/160k/200k at 32 cores. Clean-JVM measurements (r11):
-    # keeps up at 60k (66.0k), 120k (114.1k) and 160k (160.8k ≈ 5000
-    # docs/s/core), breaks at 200k (169.6k sustained, addBatch
-    # 5.3 s/batch) — the knee is between 160k and 200k. Runs must be
-    # ≥45 s: the first 2-3 batches compile the minhash codegen at
-    # 7-8 s/batch and are dropped as warmup, so a 25 s run leaves a
-    # single still-ramping steady batch and reads 2x low.
-    default = (
-        f"{int(1875 * cores)},{int(3750 * cores)},{int(5000 * cores)},{int(6250 * cores)}"
-    )
-    sweep_env = os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SWEEP", default)
-    if not sweep_env.strip():
+def _sweep(spark, section: str) -> dict:
+    """Capacity knee for a SWEEPS row: run its tier at each offered
+    rate (comma list in the rates env, else the default rates in the
+    tier's rate unit, per core when its rate is) and report the max
+    rate it keeps up with (≥95% of offered) plus the named bottleneck
+    at the first failing rate, from the micro-batch durationMs
+    breakdown. An empty rates list disables the section."""
+    tier, sweep_env, default_rates, seconds_env, default_seconds = SWEEPS[section]
+    raw = os.environ.get(sweep_env)
+    if raw is None:
+        scale = _cores(spark) if tier.per_core else 1
+        rates = [r * scale for r in default_rates]
+    else:
+        rates = [int(r) for r in raw.split(",") if r.strip()]
+    if not rates:
         return {}
-    rates = [int(r) for r in sweep_env.split(",") if r.strip()]
-    per_rate_sec = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SWEEP_SECONDS", "45"))
+    per_rate_sec = float(os.environ.get(seconds_env, str(default_seconds)))
     out: dict = {"rates": {}}
     max_kept = 0
     knee = None
     for rps in rates:
-        r = _retry_if_missed(
-            lambda rps=rps: streaming_dedup_sustained(spark, rps=rps, seconds=per_rate_sec)
-        )
+        r = _retry_if_missed(lambda rps=rps: _run_tier(spark, tier, rps=rps, seconds=per_rate_sec))
         out["rates"][str(rps)] = {
             k: r.get(k)
             for k in ("sustained_rows_per_sec", "kept_up", "state_rows", "n_batches", "durations_ms")
@@ -790,6 +632,8 @@ def streaming_dedup_capacity(spark) -> dict:
             max_kept = max(max_kept, rps)
         elif knee is None:
             knee = rps
+            # triggerExecution is the whole-batch total — name the
+            # dominant COMPONENT instead
             durs = {
                 k: v
                 for k, v in (r.get("durations_ms") or {}).items()
@@ -798,7 +642,7 @@ def streaming_dedup_capacity(spark) -> dict:
             if durs:
                 top = max(durs, key=durs.get)
                 out["knee_bottleneck"] = f"{top} ({durs[top]:.0f} ms/batch avg)" + (
-                    " — map-side minhash fold + state-store commit" if top == "addBatch" else ""
+                    tier.knee_note if top == "addBatch" else ""
                 )
     out["max_kept_up_rps"] = max_kept
     if knee is not None:
@@ -806,138 +650,66 @@ def streaming_dedup_capacity(spark) -> dict:
     return out
 
 
-def streaming_embedding_dedup_capacity(spark) -> dict:
-    """Measured knee for the embedding-bucket ingest tier, mirroring
-    streaming_dedup_capacity: sweep offered docs/s above the keep-up
-    default (800/core) until the tier stops keeping up and name the
-    dominant micro-batch component at the first failing offer. Run
-    via `bench.py --stream-embdedup` in a FRESH process (same
-    clean-JVM rationale as the minhash sweep). Rates override via
-    SPARK_GRAFT_STREAM_EMBDEDUP_SWEEP; empty disables."""
-    cores = spark.sparkContext.defaultParallelism or 32
-    default = (
-        f"{int(1600 * cores)},{int(3200 * cores)},{int(4800 * cores)},{int(6400 * cores)}"
-    )
-    sweep_env = os.environ.get("SPARK_GRAFT_STREAM_EMBDEDUP_SWEEP", default)
-    if not sweep_env.strip():
-        return {}
-    rates = [int(r) for r in sweep_env.split(",") if r.strip()]
-    per_rate_sec = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SWEEP_SECONDS", "45"))
-    out: dict = {"rates": {}}
-    max_kept = 0
-    knee = None
-    for rps in rates:
-        r = _retry_if_missed(
-            lambda rps=rps: streaming_embedding_dedup_sustained(spark, rps=rps, seconds=per_rate_sec)
-        )
-        out["rates"][str(rps)] = {
-            k: r.get(k)
-            for k in ("sustained_rows_per_sec", "kept_up", "state_rows", "n_batches", "durations_ms")
-        }
-        if r.get("kept_up"):
-            max_kept = max(max_kept, rps)
-        elif knee is None:
-            knee = rps
-            durs = {
-                k: v
-                for k, v in (r.get("durations_ms") or {}).items()
-                if k != "triggerExecution"
-            }
-            if durs:
-                top = max(durs, key=durs.get)
-                out["knee_bottleneck"] = f"{top} ({durs[top]:.0f} ms/batch avg)" + (
-                    " — sign-LSH bucket fold + state-store commit" if top == "addBatch" else ""
-                )
-    out["max_kept_up_rps"] = max_kept
-    if knee is not None:
-        out["first_failing_rps"] = knee
-    return out
+def _stream_main(spark) -> dict:
+    """The label-path sections: the stateful sustained run, its
+    capacity sweep and the pure-JVM control."""
+    return {
+        "streaming_sustained": _retry_if_missed(
+            lambda: _run_tier(spark, TIERS["streaming_sustained"])
+        ),
+        "streaming_capacity": _sweep(spark, "streaming_capacity"),
+        "streaming_sustained_jvm": _run_tier(spark, TIERS["streaming_sustained_jvm"]),
+    }
 
 
-def stream_embdedup_isolated() -> dict:
-    """Fresh-process entry for the embedding-tier capacity sweep."""
-    from dcafs_spark import get_spark
-
-    spark = get_spark("dcafs_spark_bench_embdedup")
-    spark.sparkContext.setLogLevel("ERROR")
-    out = streaming_embedding_dedup_capacity(spark)
-    out["isolated"] = True
-    for q in spark.streams.active:
-        try:
-            q.stop()
-        except Exception:
-            pass
-    spark.stop()
-    return out
-
-
-def stream_dedup_isolated() -> dict:
-    """Fresh-process entry for the dedup capacity sweep (own JVM)."""
-    from dcafs_spark import get_spark
-
-    spark = get_spark("dcafs_spark_bench_dedup")
-    spark.sparkContext.setLogLevel("ERROR")
-    out = streaming_dedup_capacity(spark)
-    out["isolated"] = True
-    for q in spark.streams.active:
-        try:
-            q.stop()
-        except Exception:
-            pass
-    spark.stop()
-    return out
-
-
-def stream_main_isolated() -> dict:
-    """Fresh-process entry for the label-path streaming sections (r12
-    verdict ask #1): the official artifacts carried a broken JVM
+def _isolated(app_name: str, fn) -> dict:
+    """Fresh-process entry: run `fn(spark)` in its own clean JVM and
+    tag the result `isolated`. The label-path sections (r12 verdict ask
+    #1) moved here after the official artifacts carried a broken JVM
     control (1 steady batch in the builder's run, 0 in the driver's)
     and a sustained section 4-5x below round 11, both measured after
-    ~15 min of accumulated suite JVM pressure. The sustained run, the
-    capacity sweep and the pure-JVM control now run in their own clean
-    JVM — the same treatment the dedup capacity sweeps got in r10/r11
-    — with the >=3-steady-batch auto-extend guaranteeing every
-    kept_up/knee verdict rests on a real window."""
+    ~15 min of accumulated suite JVM pressure — the same treatment the
+    dedup capacity sweeps got in r10/r11."""
     from dcafs_spark import get_spark
 
-    spark = get_spark("dcafs_spark_bench_stream")
+    spark = get_spark(app_name)
     spark.sparkContext.setLogLevel("ERROR")
-    out = {
-        "streaming_sustained": _retry_if_missed(lambda: streaming_sustained(spark)),
-        "streaming_capacity": streaming_capacity(spark),
-        "streaming_sustained_jvm": streaming_sustained_jvm(spark),
-        "isolated": True,
-    }
-    for q in spark.streams.active:
-        try:
-            q.stop()
-        except Exception:
-            pass
-    spark.stop()
+    out = fn(spark)
+    out["isolated"] = True
+    _teardown(spark)
     return out
 
 
-def run_stream_main_subprocess() -> dict:
-    """Spawn `bench.py --stream-main` and parse its one JSON line.
-    SPARK_GRAFT_STREAM_ISOLATED=0 falls back to in-suite execution
-    (used by the quick iteration loop, where a second JVM is slower
-    than the co-load noise it avoids)."""
+def _teardown(spark) -> None:
+    """Stop every still-active StreamingQuery, then the session."""
+    for q in spark.streams.active:
+        try:
+            q.stop()
+            q.awaitTermination(10)
+        except Exception:
+            pass
+    spark.stop()
+
+
+def _run_self(args: list[str], timeout: float, env: dict | None = None) -> dict | None:
+    """Run `bench.py <args>` in a fresh process and parse the last JSON
+    line of its stdout; None when it fails to report one."""
     import subprocess
 
     try:
         run = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--stream-main"],
+            [sys.executable, os.path.abspath(__file__), *args],
             capture_output=True,
             text=True,
-            timeout=1800,
-            env=dict(os.environ),
+            timeout=timeout,
+            env=env,
         )
         for ln in reversed(run.stdout.splitlines()):
             if ln.strip().startswith("{"):
                 return json.loads(ln)
-    except Exception:
+    except (OSError, subprocess.SubprocessError, ValueError):
         pass
-    return {"err": "isolated stream-main run failed to report"}
+    return None
 
 
 def run_dedup_capacity_subprocess() -> dict:
@@ -952,26 +724,13 @@ def run_dedup_capacity_subprocess() -> dict:
     through 160k. Both draws are recorded (`slow_jvm_first_draw`), the
     better one is the capability verdict — the same two-draw rule
     drift_recheck already applies to batch queries."""
-    import subprocess
-
     if not os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SWEEP", "x").strip():
         return {}
 
     def _one_run() -> dict:
-        try:
-            run = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--stream-dedup"],
-                capture_output=True,
-                text=True,
-                timeout=900,
-                env=dict(os.environ),
-            )
-            for ln in reversed(run.stdout.splitlines()):
-                if ln.strip().startswith("{"):
-                    return json.loads(ln)
-        except Exception:
-            pass
-        return {"err": "isolated dedup capacity run failed to report"}
+        return _run_self(["--stream-dedup"], 900) or {
+            "err": "isolated dedup capacity run failed to report"
+        }
 
     out = _one_run()
     if out.get("rates") and not out.get("max_kept_up_rps"):
@@ -987,58 +746,54 @@ def run_dedup_capacity_subprocess() -> dict:
     return out
 
 
-def streaming_capacity(spark) -> dict:
-    """Capacity knee: sweep offered rates above the sustained-run
-    baseline and report the max rate the stateful pipeline keeps up
-    with (≥95% of offered) plus the named bottleneck at the first
-    failing rate — from the micro-batch durationMs breakdown, where
-    `addBatch` is state-store + Python-state-fn execution and the
-    offset/commit entries are checkpoint I/O. Rates and per-rate run
-    length come from SPARK_GRAFT_STREAM_SWEEP / _SWEEP_SECONDS; an
-    empty sweep list disables the section."""
-    sweep_env = os.environ.get("SPARK_GRAFT_STREAM_SWEEP", "500000,1000000")
-    if not sweep_env.strip():
-        return {}
-    rates = [int(r) for r in sweep_env.split(",") if r.strip()]
-    per_rate_sec = float(os.environ.get("SPARK_GRAFT_STREAM_SWEEP_SECONDS", "30"))
-    out: dict = {"rates": {}}
-    max_kept = 0
-    knee = None
-    for rps in rates:
-        r = _retry_if_missed(
-            lambda rps=rps: streaming_sustained(spark, rps=rps, seconds=per_rate_sec)
-        )
-        out["rates"][str(rps)] = {
-            k: r.get(k)
-            for k in (
-                "sustained_rows_per_sec",
-                "kept_up",
-                "state_rows",
-                "n_batches",
-                "durations_ms",
-            )
+def _streaming_sections(spark) -> dict:
+    """Every rate-source streaming section, keyed as in STREAM_SHORT."""
+    # sustained + capacity + JVM control run in a FRESH subprocess (r12
+    # verdict ask #1 — see _isolated); the in-suite fallback
+    # (SPARK_GRAFT_STREAM_ISOLATED=0) remains for the quick iteration
+    # loop, where a second JVM is slower than the co-load noise it avoids
+    if os.environ.get("SPARK_GRAFT_STREAM_ISOLATED", "1") == "0":
+        out = _stream_main(spark)
+    else:
+        sm = _run_self(["--stream-main"], 1800) or {
+            "err": "isolated stream-main run failed to report"
         }
-        if r.get("kept_up"):
-            max_kept = max(max_kept, rps)
-        elif knee is None:
-            knee = rps
-            # triggerExecution is the whole-batch total — name the
-            # dominant COMPONENT instead
-            durs = {
-                k: v
-                for k, v in (r.get("durations_ms") or {}).items()
-                if k != "triggerExecution"
-            }
-            if durs:
-                top = max(durs, key=durs.get)
-                out["knee_bottleneck"] = (
-                    f"{top} ({durs[top]:.0f} ms/batch avg)"
-                    + (" — state-store + Python state fn" if top == "addBatch" else "")
-                )
-    out["max_kept_up_rps"] = max_kept
-    if knee is not None:
-        out["first_failing_rps"] = knee
-    return out
+        out = {
+            "streaming_sustained": sm.get("streaming_sustained", {"err": sm.get("err", "missing")}),
+            "streaming_capacity": sm.get("streaming_capacity", {}),
+            "streaming_sustained_jvm": sm.get("streaming_sustained_jvm", {}),
+        }
+        for sec in out.values():
+            if isinstance(sec, dict) and sec:
+                sec["isolated"] = True
+    # the other tiers (the dedup tiers) run LAST after ~15 min of
+    # accumulated JVM pressure and read 28-48k docs/s run-to-run on
+    # identical code — same retry-once rule as the capacity sweep; these
+    # stay in-suite BY DESIGN (they measure keep-up under realistic
+    # co-load; their capability knees come from the fresh-process sweeps)
+    for name, tier in TIERS.items():
+        if name not in out:
+            out[name] = _retry_if_missed(lambda tier=tier: _run_tier(spark, tier))
+    out["streaming_dedup_capacity"] = run_dedup_capacity_subprocess()
+    return {name: out[name] for name in STREAM_SHORT}
+
+
+def _stream_pair(sec) -> list:
+    """A section's scalar pair for the final line: [sustained rows/s,
+    kept_up] for a tier, [max kept-up offered, first failing offered]
+    for a capacity sweep, [] for an empty or failed section."""
+    if not isinstance(sec, dict):
+        return []
+    if "sustained_rows_per_sec" in sec:
+        return [int(round(sec.get("sustained_rows_per_sec") or 0)), 1 if sec.get("kept_up") else 0]
+    if "max_kept_up_rps" in sec:
+        return [int(sec.get("max_kept_up_rps") or 0), int(sec.get("first_failing_rps") or 0)]
+    return []
+
+
+def _tail_streams(streams: dict) -> dict[str, list]:
+    """The final line's `streams` map: each section's pair by short name."""
+    return {short: _stream_pair(streams.get(name)) for name, short in STREAM_SHORT.items()}
 
 
 def quick_bench(names: list[str] | None = None) -> dict:
@@ -1057,11 +812,11 @@ def quick_bench(names: list[str] | None = None) -> dict:
     relied on remembering `git checkout --`). One JSON line on stdout.
     """
     from dcafs_spark import get_spark
-    from dcafs_spark.queries import QUERIES, clear_training_memos
+    from dcafs_spark.queries import QUERIES
 
     spark = get_spark("dcafs_spark_bench_quick")
     spark.sparkContext.setLogLevel("ERROR")
-    warm_dir = "/root/testdata/sf0.001"
+    trained = trained_queries(QUERIES)
     small = os.environ.get("SPARK_GRAFT_QUICK_SMALL", "/root/testdata/sf0.01")
     big = os.environ.get("SPARK_GRAFT_QUICK_BIG", "/root/testdata/sf0.1")
     unknown = [n for n in (names or []) if n not in QUERIES]
@@ -1076,29 +831,17 @@ def quick_bench(names: list[str] | None = None) -> dict:
     t_small: dict[str, float] = {}
     for name in subset or QUERIES:
         fn = QUERIES[name][0]
-        fn(spark, warm_dir if os.path.isdir(warm_dir) else small).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        t0 = time.perf_counter()
-        fn(spark, small).write.format("noop").mode("overwrite").save()
-        t_small[name] = round(time.perf_counter() - t0, 3)
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prev = _prev_round_detail(repo_dir, os.path.join(repo_dir, "BENCH_DETAIL.json"))
+        _warm(spark, fn, small)
+        t_small[name] = round(_run_query(spark, fn, small), 3)
+    prev = _prev_round_detail()
     rank = (prev or {}).get("queries") or t_small
     top = subset or [
         n for n in sorted(rank, key=rank.get, reverse=True) if n in QUERIES
     ][:20]
     t_big: dict[str, float] = {}
     for name in top:
-        fn = QUERIES[name][0]
-        best = float("inf")
-        for _ in range(2):
-            if name in TRAINED_QUERIES:  # same cold-rep rule as main()
-                clear_training_memos()
-            t0 = time.perf_counter()
-            fn(spark, big).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        t_big[name] = round(best, 3)
+        # same cold-rep rule as main()
+        t_big[name] = round(_best_time(spark, QUERIES[name][0], big, name in trained), 3)
         spark.sparkContext._jvm.System.gc()
     payload = {
         "metric": "quick_bench",
@@ -1126,32 +869,24 @@ def isolated_remeasure(names: list[str]) -> dict[str, float]:
     so this is the number a human would measure to decide whether a
     >2x in-suite reading is a code regression or session drift."""
     from dcafs_spark import get_spark
-    from dcafs_spark.queries import QUERIES, clear_training_memos
+    from dcafs_spark.queries import QUERIES
 
     spark = get_spark("dcafs_spark_bench_isolated")
     spark.sparkContext.setLogLevel("ERROR")
-    warm_dir = "/root/testdata/sf0.001"
+    trained = trained_queries(QUERIES)
     out: dict[str, float] = {}
     for name in names:
         if name not in QUERIES:
             continue
         fn, _sql = QUERIES[name]
-        fn(spark, warm_dir if os.path.isdir(warm_dir) else SF_DIR).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        best = float("inf")
-        for _ in range(2):
-            if name in TRAINED_QUERIES:  # same cold-rep rule as main()
-                clear_training_memos()
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
+        _warm(spark, fn, SF_DIR)
+        # same cold-rep rule as main()
+        out[name] = round(_best_time(spark, fn, SF_DIR, name in trained), 3)
     spark.stop()
     return out
 
 
-def _prev_round_detail(repo_dir: str, detail_path: str) -> dict | None:
+def _prev_round_detail() -> dict | None:
     """The PRIOR ROUND's full per-query detail: prefer the committed
     BENCH_DETAIL.json (git HEAD — local iteration runs overwrite the
     worktree copy), fall back to whatever is on disk."""
@@ -1159,7 +894,7 @@ def _prev_round_detail(repo_dir: str, detail_path: str) -> dict | None:
 
     try:
         raw = subprocess.run(
-            ["git", "-C", repo_dir, "show", "HEAD:BENCH_DETAIL.json"],
+            ["git", "-C", REPO_DIR, "show", "HEAD:BENCH_DETAIL.json"],
             capture_output=True,
             text=True,
             timeout=30,
@@ -1169,15 +904,13 @@ def _prev_round_detail(repo_dir: str, detail_path: str) -> dict | None:
     except Exception:
         pass
     try:
-        with open(detail_path) as fh:
+        with open(DETAIL_PATH) as fh:
             return json.load(fh)
     except Exception:
         return None
 
 
-def drift_recheck(
-    timings: dict[str, float], control_sec: float, sf: str, repo_dir: str, detail_path: str
-) -> dict:
+def drift_recheck(timings: dict[str, float], control_sec: float, sf: str) -> dict:
     """Automatic drift adjudication (r10 verdict ask #3): any query
     whose NET-of-control ratio vs the prior round exceeds 2x gets ONE
     fresh-process isolated re-measure recorded alongside the in-suite
@@ -1185,18 +918,9 @@ def drift_recheck(
     flapped ~2x with session JVM pressure on untouched code; the
     isolated number (a clean JVM, like the judge's manual re-measure)
     is what separates environment drift from a real regression."""
-    import subprocess
-
     if os.environ.get("SPARK_GRAFT_DRIFT_RECHECK", "1") == "0":
         return {}
-    prev = _prev_round_detail(repo_dir, detail_path)
-
-    def _sfval(x):
-        try:
-            return float(x)
-        except (TypeError, ValueError):
-            return str(x)
-
+    prev = _prev_round_detail()
     if not prev or not prev.get("control_sec") or _sfval(prev.get("sf")) != _sfval(sf):
         return {}
     env = control_sec / prev["control_sec"] if prev["control_sec"] > 0 else 1.0
@@ -1219,21 +943,10 @@ def drift_recheck(
     names = [n for _r, n in sorted(flagged, reverse=True)][:8]
     if not names:
         return {}
+
     def _iso_run(run_names: list[str]) -> dict:
-        try:
-            run = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--isolated", *run_names],
-                capture_output=True,
-                text=True,
-                timeout=600,
-                env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
-            )
-            for ln in reversed(run.stdout.splitlines()):
-                if ln.strip().startswith("{"):
-                    return json.loads(ln)
-        except Exception:
-            pass
-        return {}
+        iso_env = {**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR}
+        return _run_self(["--isolated", *run_names], 600, iso_env) or {}
 
     iso = _iso_run(names)
     # r14 root-cause (dedup_simhash bimodality): a per-JVM C2-compile
@@ -1279,15 +992,8 @@ def main() -> None:
     spark = get_spark("dcafs_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warmup: run every query once at the smallest SF — compiles the
-    # whole-stage-codegen for each plan (lambda-heavy dedup plans cost
-    # seconds to janino-compile on first execution) so the timed pass
-    # below measures steady-state execution, not compiler latency
-    warm_dir = "/root/testdata/sf0.001"
-    for _name, (fn, _sql) in QUERIES.items():
-        fn(spark, warm_dir if os.path.isdir(warm_dir) else SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
+    for fn, _sql in QUERIES.values():
+        _warm(spark, fn, SF_DIR)
     # untimed runs of the first THREE registered queries at the TIMED
     # SF: round 8 showed the first timed measurement absorbing residual
     # JVM/page-cache warmup that the sf0.001 pass doesn't cover
@@ -1299,12 +1005,11 @@ def main() -> None:
     # all three at full size measures them steady-state like the rest.
     for fn, _sql in list(QUERIES.values())[:3]:
         for _ in range(2):
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-
-    from dcafs_spark.queries import clear_training_memos
+            _run_query(spark, fn, SF_DIR)
 
     timings: dict[str, float] = {}
     trained_warm: dict[str, float] = {}
+    trained_names = trained_queries(QUERIES)
     for name, (fn, _sql) in QUERIES.items():
         # *_trained queries: the per-sf_dir model memos are cleared
         # before EVERY rep so the row includes training cost (r14
@@ -1312,51 +1017,16 @@ def main() -> None:
         # model. A final memo-warm rep is recorded separately in
         # trained_warm_sec for round-over-round comparability with the
         # pre-r15 rows.
-        trained = name in TRAINED_QUERIES
-        best = float("inf")
-        for rep in range(3):  # min-of-2, plus a 3rd rep for heavy
-            if trained:
-                clear_training_memos()
-            t0 = time.perf_counter()  # queries: one GC pause inside a
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            if rep == 1 and best < 1.5:  # fast queries: min-of-2 suffices
-                break
-        timings[name] = round(best, 3)
+        trained = name in trained_names
+        timings[name] = round(_best_time(spark, fn, SF_DIR, trained, reps=3), 3)
         if trained:
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            trained_warm[name] = round(time.perf_counter() - t0, 3)
+            trained_warm[name] = round(_run_query(spark, fn, SF_DIR), 3)
         # let the ContextCleaner reclaim checkpoint/broadcast RDDs so
         # earlier queries' caches don't pressure later measurements
         spark.sparkContext._jvm.System.gc()
 
     streaming_rate = round(streaming_lines_per_sec(spark), 1)
-    # sustained + capacity + JVM control run in a FRESH subprocess (r12
-    # verdict ask #1 — see stream_main_isolated); the in-suite fallback
-    # remains for the quick iteration loop
-    if os.environ.get("SPARK_GRAFT_STREAM_ISOLATED", "1") == "0":
-        sustained = _retry_if_missed(lambda: streaming_sustained(spark))
-        capacity = streaming_capacity(spark)
-        jvm_control = streaming_sustained_jvm(spark)
-    else:
-        sm = run_stream_main_subprocess()
-        sustained = sm.get("streaming_sustained", {"err": sm.get("err", "missing")})
-        capacity = sm.get("streaming_capacity", {})
-        jvm_control = sm.get("streaming_sustained_jvm", {})
-        for sec in (sustained, capacity, jvm_control):
-            if isinstance(sec, dict) and sec:
-                sec["isolated"] = True
-    # the dedup tiers run LAST after ~15 min of accumulated JVM
-    # pressure and read 28-48k docs/s run-to-run on identical code —
-    # same retry-once rule as the capacity sweep; these stay in-suite
-    # BY DESIGN (they measure keep-up under realistic co-load; their
-    # capability knees come from the fresh-process sweeps below)
-    dedup_tier = _retry_if_missed(lambda: streaming_dedup_sustained(spark))
-    emb_dedup_tier = _retry_if_missed(lambda: streaming_embedding_dedup_sustained(spark))
-    url_tier = _retry_if_missed(lambda: streaming_url_dedup_sustained(spark))
-    para_tier = _retry_if_missed(lambda: streaming_paragraph_dedup_sustained(spark))
-    dedup_capacity = run_dedup_capacity_subprocess()
+    streams = _streaming_sections(spark)
 
     total = round(sum(timings.values()), 3)
     # fixed 20-query control group (stable since round 7, untouched by
@@ -1372,13 +1042,10 @@ def main() -> None:
         "waypoint_geofence", "threshold_crossings", "nation_profit", "pii_scrub",
     ]
     control_sec = round(sum(timings.get(k, 0.0) for k in control), 3)
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     # fresh-process adjudication of >2x net-drift queries — must read
     # the PRIOR round's detail before this run overwrites the file
-    drift = drift_recheck(
-        timings, control_sec, sf, repo_dir, os.path.join(repo_dir, "BENCH_DETAIL.json")
-    )
+    drift = drift_recheck(timings, control_sec, sf)
     # automatic drift attribution: compare this run's frozen-control
     # total against the most recent prior round's (parsed from the
     # committed BENCH_r*.json stdout tails — round 8 was the first to
@@ -1386,26 +1053,15 @@ def main() -> None:
     prev_control, prev_round = None, None
     import glob
 
-    for f in sorted(glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json"))):
+    for f in sorted(glob.glob(os.path.join(REPO_DIR, "BENCH_r*.json"))):
         try:
             wrap = json.load(open(f))
             lines_ = [ln for ln in wrap.get("tail", "").splitlines() if ln.strip().startswith("{")]
             prev_payload = json.loads(lines_[-1])
             c = prev_payload.get("control_sec")
             # same-SF runs only — a sf0.01 iteration run must not
-            # compare its control against the sf0.1 round record.
-            # Compare as floats: the payload stores sf=float('1')=1.0
-            # while the dir suffix reads '1', so a string compare would
-            # silently drop the control for integer SFs
-            def _sfval(x):
-                try:
-                    return float(x)
-                except (TypeError, ValueError):
-                    return str(x)
-
-            if c and _sfval(prev_payload.get("sf")) == _sfval(
-                SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-            ):
+            # compare its control against the sf0.1 round record
+            if c and _sfval(prev_payload.get("sf")) == _sfval(sf):
                 prev_control, prev_round = c, wrap.get("n")
         except Exception:
             continue
@@ -1417,14 +1073,7 @@ def main() -> None:
         "n_queries": len(timings),  # normalize round-over-round totals
         "control_sec": control_sec,  # frozen 20-query drift reference
         "streaming_lines_per_sec": streaming_rate,
-        "streaming_sustained": sustained,
-        "streaming_capacity": capacity,
-        "streaming_sustained_jvm": jvm_control,
-        "streaming_dedup_tier": dedup_tier,
-        "streaming_embedding_dedup_tier": emb_dedup_tier,
-        "streaming_url_dedup_tier": url_tier,
-        "streaming_paragraph_dedup_tier": para_tier,
-        "streaming_dedup_capacity": dedup_capacity,
+        **streams,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     if trained_warm:
@@ -1443,34 +1092,20 @@ def main() -> None:
     # gap: r12 primed them warm while r11 measured them cold; from r13
     # on, both the warm in-suite number and an isolated number exist.)
     if os.environ.get("SPARK_GRAFT_ISOLATED_TOP10", "1") != "0":
-        import subprocess as _sp
-
         top = sorted(timings, key=timings.get, reverse=True)[:10]
         names = list(dict.fromkeys(list(timings)[:3] + top))
-        try:
-            run = _sp.run(
-                [sys.executable, os.path.abspath(__file__), "--isolated", *names],
-                capture_output=True,
-                text=True,
-                timeout=900,
-                env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
-            )
-            iso = {}
-            for ln in reversed(run.stdout.splitlines()):
-                if ln.strip().startswith("{"):
-                    iso = json.loads(ln)
-                    break
+        iso = _run_self(["--isolated", *names], 900, {**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR})
+        if iso is None:
+            payload["isolated_top10"] = {"err": "isolated sweep failed to report"}
+        else:
             payload["isolated_top10"] = {
                 n: {"in_suite": timings[n], "isolated": iso.get(n)} for n in names
             }
-        except Exception:
-            payload["isolated_top10"] = {"err": "isolated sweep failed to report"}
     if prev_control:
         payload["control_vs_prev"] = round(control_sec / prev_control, 3)
         payload["prev_control"] = {"round": prev_round, "control_sec": prev_control}
     # Full per-query detail always lands in the repo for the judge.
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
-    with open(detail_path, "w") as fh:
+    with open(DETAIL_PATH, "w") as fh:
         json.dump(payload, fh, indent=1)
         fh.write("\n")
     # TEARDOWN BEFORE the final prints: round 9's driver artifact was
@@ -1480,13 +1115,7 @@ def main() -> None:
     # and drain briefly so late executor/cleaner threads finish writing
     # — only then emit the JSON, guaranteed to be the last stdout.
     try:
-        for q in spark.streams.active:
-            try:
-                q.stop()
-                q.awaitTermination(10)
-            except Exception:
-                pass
-        spark.stop()
+        _teardown(spark)
     except Exception:
         pass
     time.sleep(2.0)
@@ -1509,22 +1138,6 @@ def main() -> None:
     # holds this exact final line.
     print(json.dumps(payload))
 
-    def _tier_pair(sec) -> list:
-        if not isinstance(sec, dict) or "sustained_rows_per_sec" not in sec:
-            return []
-        return [
-            int(round(sec.get("sustained_rows_per_sec") or 0)),
-            1 if sec.get("kept_up") else 0,
-        ]
-
-    def _cap_pair(sec) -> list:
-        if not isinstance(sec, dict) or "max_kept_up_rps" not in sec:
-            return []
-        return [
-            int(sec.get("max_kept_up_rps") or 0),
-            int(sec.get("first_failing_rps") or 0),
-        ]
-
     tail = {
         "metric": payload["metric"],
         "value": total,
@@ -1534,19 +1147,7 @@ def main() -> None:
         "sf": payload["sf"],
         "queries": {},
         "streaming_lines_per_sec": streaming_rate,
-        # [sustained rows/s, kept_up] per tier; [max kept-up offered,
-        # first failing offered] for the capacity sweeps — full dicts
-        # in BENCH_DETAIL.json
-        "streams": {
-            "sustained": _tier_pair(sustained),
-            "capacity": _cap_pair(capacity),
-            "jvm": _tier_pair(jvm_control),
-            "dedup": _tier_pair(dedup_tier),
-            "embdedup": _tier_pair(emb_dedup_tier),
-            "urldedup": _tier_pair(url_tier),
-            "paradedup": _tier_pair(para_tier),
-            "dedup_capacity": _cap_pair(dedup_capacity),
-        },
+        "streams": _tail_streams(streams),
         "detail": "BENCH_DETAIL.json",
     }
     if prev_control:
@@ -1562,8 +1163,7 @@ def main() -> None:
     tail["queries"] = shown
     # sidecar fallback: the exact line the driver should parse, on disk,
     # in case anything still pollutes the stdout tail
-    tail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_TAIL.json")
-    with open(tail_path, "w") as fh:
+    with open(os.path.join(REPO_DIR, "BENCH_TAIL.json"), "w") as fh:
         fh.write(json.dumps(tail, separators=(",", ":")) + "\n")
     print(json.dumps(tail, separators=(",", ":")))
     sys.stdout.flush()
@@ -1575,10 +1175,12 @@ if __name__ == "__main__":
     elif len(sys.argv) > 1 and sys.argv[1] == "--quick":
         print(json.dumps(quick_bench(sys.argv[2:])))
     elif len(sys.argv) > 1 and sys.argv[1] == "--stream-main":
-        print(json.dumps(stream_main_isolated()))
+        print(json.dumps(_isolated("dcafs_spark_bench_stream", _stream_main)))
     elif len(sys.argv) > 1 and sys.argv[1] == "--stream-dedup":
-        print(json.dumps(stream_dedup_isolated()))
+        sweep = "streaming_dedup_capacity"
+        print(json.dumps(_isolated("dcafs_spark_bench_dedup", lambda s: _sweep(s, sweep))))
     elif len(sys.argv) > 1 and sys.argv[1] == "--stream-embdedup":
-        print(json.dumps(stream_embdedup_isolated()))
+        sweep = "streaming_embedding_dedup_capacity"
+        print(json.dumps(_isolated("dcafs_spark_bench_embdedup", lambda s: _sweep(s, sweep))))
     else:
         main()

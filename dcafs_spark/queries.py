@@ -9470,8 +9470,8 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
     # trained-PQ acceptance (r11 ask #4a, moved past the cap r13 per
     # r12 verdict ask #3): no SQL oracle BY DESIGN — trained codebooks
     # are data-dependent float reductions (replica rows-only check;
-    # numpy third oracle in tests/test_similarity.py replicates the
-    # full pipeline)
+    # numpy third oracle in tests/test_analytics_differential.py
+    # replicates the full pipeline)
     "pq_recall_trained": (q_pq_recall_trained, None),
     # round-14 (r13 verdict ask #6): fully-trained IVF-PQ — rows-only
     # by the same adjudicated pattern (trained centroids AND codebooks

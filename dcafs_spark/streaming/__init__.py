@@ -1,4 +1,4 @@
-from dcafs_spark.streaming.runner import StreamingPath, run_path_stream
+from dcafs_spark.streaming.runner import StreamingPath
 from dcafs_spark.streaming.values_store import TriggerRule, ValuesStore
 
-__all__ = ["StreamingPath", "run_path_stream", "TriggerRule", "ValuesStore"]
+__all__ = ["StreamingPath", "TriggerRule", "ValuesStore"]

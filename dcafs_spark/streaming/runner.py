@@ -21,7 +21,6 @@ surfaces Spark's native handling as an opt-in.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -161,32 +160,3 @@ class StreamingPath:
             writer = writer.option("checkpointLocation", self.checkpoint)
         return writer.start()
 
-
-def run_path_stream(
-    spark: SparkSession,
-    source: dict,
-    path: PathSpec,
-    sinks: list[Callable[[DataFrame, int], Any]],
-    store: ValuesStore | None = None,
-    timeout_s: float = 30.0,
-    until: Callable[[], bool] | None = None,
-    **kwargs,
-):
-    """Run a streaming path until `until()` (or timeout), then stop.
-    Returns the StreamingQuery after it is stopped (for test harnesses
-    and the DebugWorker-style replay pattern, SURVEY §5.1)."""
-    sp = StreamingPath(spark, source, path, store=store, sinks=sinks, **kwargs)
-    q = sp.start()
-    deadline = time.monotonic() + timeout_s
-    try:
-        while time.monotonic() < deadline:
-            if until is not None and until():
-                break
-            q.processAllAvailable()
-            if until is None:
-                break
-            time.sleep(0.2)
-    finally:
-        q.stop()
-        q.awaitTermination(10)
-    return q

@@ -5,6 +5,8 @@
 #   scripts/quick_verify.sh             # full-catalog loop, ~6 min
 #   scripts/quick_verify.sh q1 q2 ...   # subset loop, <5 min
 #
+# Leg 0 — harness: the benchmark's and bench.py's own Spark-free tests
+#   (seconds), so a broken benchmark or streaming harness surfaces first.
 # Leg 1 — correctness: scripts/check_oracle.py (the judge-replica
 #   Spark-vs-DuckDB gate at sf0.01; prints per-query wall seconds, so
 #   gross perf regressions surface here too). Subset names are passed
@@ -15,10 +17,11 @@
 #   BENCH_DETAIL.json/BENCH_TAIL.json remain the committed round
 #   record).
 #
-# The full official bench (161 queries at sf0.1 + isolated streaming
+# The full official bench (175 queries at sf0.1 + isolated streaming
 # sections + isolated top-10 sweep, ~25 min) remains `python bench.py`
 # and is run once at round close.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+python3 -m pytest perfbench/tests tests/test_bench_harness.py -q
 python scripts/check_oracle.py "$@"
 python bench.py --quick "$@"
