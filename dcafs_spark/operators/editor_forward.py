@@ -14,6 +14,7 @@ control flow.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -165,11 +166,19 @@ class EditorForward:
     # (same stream-static pattern as MathForward.rtvals)
     rtvals: dict[str, Column] = None  # type: ignore[assignment]
 
-    def apply(self, df: DataFrame, drop_failed: bool = True) -> DataFrame:
+    def bind(self, drop_failed: bool = True) -> Callable[[DataFrame], DataFrame]:
+        """Compose the edit chain's Column once; the returned function
+        applies it to any frame it is given."""
         col = F.col(self.column)
         for e in self.edits:
             col = _apply_edit(col, e, self.delimiter, self.rtvals)
-        out = df.withColumn(self.column, col)
-        if drop_failed:
-            out = out.filter(F.col(self.column).isNotNull())
-        return out
+        ok = F.col(self.column).isNotNull()
+
+        def run(df: DataFrame) -> DataFrame:
+            out = df.withColumn(self.column, col)
+            return out.filter(ok) if drop_failed else out
+
+        return run
+
+    def apply(self, df: DataFrame, drop_failed: bool = True) -> DataFrame:
+        return self.bind(drop_failed)(df)

@@ -22,6 +22,7 @@ resolve through the ocean function library.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -104,16 +105,27 @@ class MathForward:
                 named[op.target] = result
         return env, named
 
+    def bind_typed(self, keep: list[str] | None = None) -> Callable[[DataFrame], DataFrame]:
+        """Build the typed projection's Columns once; the returned
+        function exposes every written field/named output as a typed
+        column of any frame it is given."""
+        env, named = self._build_env()
+        outs = [v.alias(f"i{k}") for k, v in sorted(env.items())]
+        outs += [v.alias(name) for name, v in named.items()]
+        kept = [F.col(c) for c in keep] if keep else None
+
+        def run(df: DataFrame) -> DataFrame:
+            return df.select(*(kept or [F.col(c) for c in df.columns]), *outs)
+
+        return run
+
     def apply_typed(self, df: DataFrame, keep: list[str] | None = None) -> DataFrame:
         """Expose every written field/named output as a typed column."""
-        env, named = self._build_env()
-        cols = [F.col(c) for c in (keep or df.columns)]
-        cols += [v.alias(f"i{k}") for k, v in sorted(env.items())]
-        cols += [v.alias(name) for name, v in named.items()]
-        return df.select(*cols)
+        return self.bind_typed(keep)(df)
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        """dcafs-fidelity mode: rewrite the delimited line in place."""
+    def bind(self) -> Callable[[DataFrame], DataFrame]:
+        """Build the in-place rewrite's Columns once; the returned
+        function applies them to any frame it is given."""
         env, named = self._build_env()
         arr = F.split(F.col(self.column), F.lit(self.delimiter), -1)
 
@@ -143,7 +155,15 @@ class MathForward:
             # only if the caller stripped it — match the reference, which
             # appends regardless
             new_line = F.concat(new_line, F.lit("*"), nmea_checksum(new_line))
-        out = df.withColumn(self.column, new_line)
-        for name, v in named.items():
-            out = out.withColumn(name, v)
-        return out
+
+        def run(df: DataFrame) -> DataFrame:
+            out = df.withColumn(self.column, new_line)
+            for name, v in named.items():
+                out = out.withColumn(name, v)
+            return out
+
+        return run
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        """dcafs-fidelity mode: rewrite the delimited line in place."""
+        return self.bind()(df)

@@ -14,6 +14,7 @@ the caller can take from `errors()`).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -65,7 +66,9 @@ class Generic:
             return F.col(self.column).startswith(self.startswith)
         return F.lit(True)
 
-    def apply(self, df: DataFrame, keep: list[str] | None = None) -> DataFrame:
+    def bind(self, keep: list[str] | None = None) -> Callable[[DataFrame], DataFrame]:
+        """Build the guard and the typed projection once; the returned
+        function applies them to any frame it is given."""
         arr = self._array()
         cols: list[Column] = [F.col(c) for c in (keep or [])]
         for f in self.fields:
@@ -75,7 +78,11 @@ class Generic:
                 cols.append(F.current_timestamp().alias(name))
             elif kind == "epoch":
                 cols.append((F.unix_millis(F.current_timestamp())).alias(name))
-        return df.filter(self.guard()).select(*cols)
+        guard = self.guard()
+        return lambda df: df.filter(guard).select(*cols)
+
+    def apply(self, df: DataFrame, keep: list[str] | None = None) -> DataFrame:
+        return self.bind(keep)(df)
 
     def errors(self, df: DataFrame) -> DataFrame:
         """Rows where any non-defaulted typed field fails to parse —

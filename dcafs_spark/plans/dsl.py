@@ -28,6 +28,12 @@ Spec shape::
 `compile_path` returns (main DataFrame, {reject_tag: DataFrame}).
 The same compiler serves batch and streaming inputs — a streaming df
 flows through identically (all steps are narrow transformations).
+Compiling is bind-then-apply: `bind_path` builds every step's Columns
+once (each is a tree of JVM calls), and the `BoundPath` it returns
+applies them to any number of frames. A streaming path binds at start
+and applies per micro-batch; only `valmap` (its output columns follow
+the frame's) and `custom` (a user function) still run their build per
+frame.
 
 A filter step's failure route mirrors the reference's *reverse
 targets* (`FilterForward.java:69-81`): the complementary predicate
@@ -36,7 +42,8 @@ over the same parent plan. Catalyst reuses the scan for both sides.
 
 from __future__ import annotations
 
-from typing import Any
+from dataclasses import dataclass
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
@@ -99,61 +106,91 @@ def _build_generic(step: dict, delimiter: str) -> Generic:
     )
 
 
-def compile_steps(
-    df: DataFrame, steps: list[dict], delimiter: str = ",", column: str = "value"
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """Apply each step in order; returns (main, rejects-by-tag)."""
-    rejects: dict[str, DataFrame] = {}
-    for step in steps:
-        kind = step["type"].lower()
-        if kind == "filter":
-            ff = _build_filter(step, delimiter, column)
-            if "reject" in step:
-                df, rejected = ff.fork(df)
-                rejects[step["reject"]] = rejected
-            else:
-                df = ff.apply(df)
-        elif kind == "math":
-            mf = _build_math(step, delimiter, column)
-            if step.get("typed", False):
-                df = mf.apply_typed(df, keep=step.get("keep"))
-            else:
-                df = mf.apply(df)
-        elif kind == "editor":
-            ed = _build_editor(step, delimiter, column)
-            df = ed.apply(df)
-        elif kind == "generic":
-            g = _build_generic(step, delimiter)
-            df = g.apply(df, keep=step.get("keep"))
-        elif kind == "valmap":
-            df = valmap(
-                df,
-                split=step.get("split", ":"),
-                multi_delimiter=step.get("multi"),
-                column=column,
-            )
-        elif kind == "custom":
-            # extension point — the Spark analog of the reference's
-            # custom label handlers (LabelWorker doLABEL(Datagram),
-            # manual 'Adding a label' / SURVEY §2.10): a user callable
-            # DataFrame -> DataFrame spliced into the compiled chain.
-            # Distribution discipline is the author's contract, same as
-            # any DataFrame transform; no driver-side row loop exists
-            # here for one to accidentally fall into.
-            fn = step.get("fn")
-            if not callable(fn):
-                raise ValueError("custom step needs a callable 'fn'")
-            df = fn(df)
-        else:
-            raise ValueError(f"unknown step type: {kind}")
-    return df, rejects
+Step = Callable[[DataFrame, dict[str, DataFrame]], DataFrame]
 
 
-def compile_path(df: DataFrame, spec: PathSpec) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """Compile a full path spec against an input DataFrame."""
-    return compile_steps(
-        df,
+def _bind_step(step: dict, delimiter: str, column: str) -> Step:
+    """One step spec → a function (frame, rejects-by-tag) → frame, with
+    the step's Columns already built; a reject route adds its frame to
+    the rejects."""
+    kind = step["type"].lower()
+    if kind == "filter":
+        keep = _build_filter(step, delimiter, column).predicate()
+        if "reject" not in step:
+            return lambda df, _rejects: df.filter(keep)
+        tag, drop = step["reject"], ~keep
+
+        def fork(df: DataFrame, rejects: dict[str, DataFrame]) -> DataFrame:
+            rejects[tag] = df.filter(drop)
+            return df.filter(keep)
+
+        return fork
+    if kind == "math":
+        mf = _build_math(step, delimiter, column)
+        run = mf.bind_typed(step.get("keep")) if step.get("typed", False) else mf.bind()
+    elif kind == "editor":
+        run = _build_editor(step, delimiter, column).bind()
+    elif kind == "generic":
+        run = _build_generic(step, delimiter).bind(step.get("keep"))
+    elif kind == "valmap":
+        # its output columns follow the input frame's, so it builds per frame
+        split, multi = step.get("split", ":"), step.get("multi")
+        run = lambda df: valmap(df, split=split, multi_delimiter=multi, column=column)  # noqa: E731
+    elif kind == "custom":
+        # extension point — the Spark analog of the reference's
+        # custom label handlers (LabelWorker doLABEL(Datagram),
+        # manual 'Adding a label' / SURVEY §2.10): a user callable
+        # DataFrame -> DataFrame spliced into the compiled chain, run
+        # on every frame. Distribution discipline is the author's
+        # contract, same as any DataFrame transform; no driver-side row
+        # loop exists here for one to accidentally fall into.
+        run = step.get("fn")
+        if not callable(run):
+            raise ValueError("custom step needs a callable 'fn'")
+    else:
+        raise ValueError(f"unknown step type: {kind}")
+    return lambda df, _rejects: run(df)
+
+
+@dataclass(frozen=True)
+class BoundPath:
+    """A path whose steps are built: calling it on a frame only applies
+    the prepared Columns, returning (main, rejects-by-tag)."""
+
+    steps: tuple[Step, ...]
+
+    def __call__(self, df: DataFrame) -> tuple[DataFrame, dict[str, DataFrame]]:
+        rejects: dict[str, DataFrame] = {}
+        for step in self.steps:
+            df = step(df, rejects)
+        return df, rejects
+
+
+def bind_steps(steps: list[dict], delimiter: str = ",", column: str = "value") -> BoundPath:
+    """Build every step once. A spec that cannot be built raises here."""
+    return BoundPath(tuple(_bind_step(step, delimiter, column) for step in steps))
+
+
+def bind_path(spec: PathSpec) -> BoundPath:
+    """Build a full path spec once, for applying to many frames."""
+    return bind_steps(
         spec.get("steps", []),
         delimiter=spec.get("delimiter", ","),
         column=spec.get("column", "value"),
     )
+
+
+def compile_steps(
+    df: DataFrame, steps: list[dict], delimiter: str = ",", column: str = "value"
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """Apply each step in order; returns (main, rejects-by-tag)."""
+    return bind_steps(steps, delimiter, column)(df)
+
+
+def compile_path(
+    df: DataFrame, spec: PathSpec | BoundPath
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """Compile a full path spec against an input DataFrame; a path bound
+    by ``bind_path`` skips the build."""
+    bound = spec if isinstance(spec, BoundPath) else bind_path(spec)
+    return bound(df)

@@ -4,7 +4,7 @@ Parity target: the reference's main loop — stream → forwards → store
 (SURVEY §3.1). One continuous query per path:
 
     readStream (file/rate/socket/kafka)
-      → compile_path steps (narrow, codegen-fused)
+      → path steps, bound once at start (narrow, codegen-fused)
       → foreachBatch { values-store merge + trigger rules
                        + sink appends }
 
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from dcafs_spark.runtime import checkpoint
 
-from dcafs_spark.plans.dsl import PathSpec, compile_path
+from dcafs_spark.plans.dsl import PathSpec, bind_path, compile_path
 from dcafs_spark.streaming.values_store import ValuesStore
 
 
@@ -125,15 +125,18 @@ class StreamingPath:
     checkpoint: str | None = None
 
     def start(self, query_name: str | None = None):
+        # build the path's Columns once, before the query starts: a
+        # spec that cannot be built raises here, not in the first batch
+        bound = bind_path(self.path)
         df = build_source(self.spark, self.source)
         if self.watermark:
             df = df.withWatermark("ts", self.watermark)
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            # compile per batch: steps are narrow, so this is plan-build
-            # cost only (µs), and rtval refs re-resolve each batch
-            # (stream-static join semantics, SURVEY §2.8)
-            main, rejects = compile_path(batch_df, self.path)
+            # per batch only the prepared Columns are applied: building
+            # them for a four-step path is ~700 py4j calls, applying
+            # them is one call per DataFrame operation
+            main, rejects = compile_path(batch_df, bound)
             n_consumers = len(self.sinks) + (1 if self.store is not None else 0)
             if n_consumers > 1:
                 # materialize once, fan out — but only when something

@@ -11,7 +11,10 @@ Design (SURVEY §3.1 Spark equivalent): the stream is aggregated
 per micro-batch (map-side partial agg → tiny shuffle keyed by
 (group,name)), and the per-key *running* state — last value,
 running min/max, count, history tail, armed/fired trigger flags —
-merges batch deltas driver-side in ``foreachBatch``.
+merges batch deltas driver-side in ``foreachBatch``. The merge is one
+aggregation (a shuffle-map job and a result job): it returns each
+key's deltas, and for keys with trigger rules also the batch's values
+in ts order, from the same sorted list the history tail is sliced from.
 
 Why driver-side state is the scale-correct choice here: the key
 cardinality is the number of distinct sensor value ids — hundreds,
@@ -30,7 +33,7 @@ import math
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dcafs_spark.functions.compare import compile_compare_py
@@ -82,17 +85,60 @@ class ValuesStore:
         self.flags: dict[tuple[str, str], bool] = {}  # FlagVal store
         self.rules: list[TriggerRule] = []
         self.fired_log: list[tuple[str, str, str, float]] = []
+        self._agg: tuple[tuple, tuple] | None = None  # see _aggregation
 
     def add_rule(self, rule: TriggerRule) -> None:
         self.rules.append(rule)
 
     # ---------------------------------------------------------- batch path
+    def _aggregation(
+        self, sc: Any, names: tuple[str, str, str, str]
+    ) -> tuple[Column, list[Column], list[Column]]:
+        """(non-NULL filter, grouping Columns, aggregate Columns) for
+        ``batch_deltas``. Built once and reused while the column names,
+        the ruled keys, ``history_n`` and the SparkContext stay the same:
+        a single entry, so a rule added mid-stream rebuilds it on the
+        next batch. Columns live in the JVM that built them, so the
+        context, not the per-batch session wrapper, keys the entry."""
+        ruled = frozenset((r.group, r.name) for r in self.rules)
+        key = (names, ruled, self.history_n, sc)
+        if self._agg is not None and self._agg[0] == key:
+            return self._agg[1]
+        group, name, value, ts = (F.col(c) for c in names)
+        packed = F.array_sort(F.collect_list(F.struct(ts.alias("t"), value.alias("v"))))
+        # dynamic start: slice(-n) on an array shorter than n is empty,
+        # so clamp to -size when the batch holds fewer than n values
+        tail = F.slice(
+            packed, F.greatest(F.lit(-self.history_n), -F.size(packed)), F.lit(self.history_n)
+        )
+        aggs = [
+            F.max_by(value, ts).alias("d_last"),
+            F.min(value).alias("d_min"),
+            F.max(value).alias("d_max"),
+            F.count(value).alias("d_count"),
+            F.sum(value).alias("d_sum"),
+            F.max(ts).alias("d_ts"),
+            F.transform(tail, lambda s: s["v"]).alias("d_tail"),
+        ]
+        if ruled:
+            # ruled keys also carry the batch's whole ordered sequence,
+            # from the same sorted list the tail is sliced from
+            wanted = [F.struct(F.lit(g).alias("g"), F.lit(n).alias("n")) for g, n in sorted(ruled)]
+            is_ruled = F.struct(group.alias("g"), name.alias("n")).isin(*wanted)
+            aggs.append(F.when(is_ruled, F.transform(packed, lambda s: s["v"])).alias("d_seq"))
+        built = (value.isNotNull(), [group.alias("group"), name.alias("name")], aggs)
+        self._agg = (key, built)
+        return built
+
     def batch_deltas(self, df: DataFrame, group="group", name="name", value="value", ts="ts") -> DataFrame:
         """Distributed reduction: one delta row per key per batch.
 
         collect_list over the groupBy is bounded: only the last
-        ``history_n`` values matter, so we aggregate the batch tail via
-        max_by struct packing (avoids shipping whole batches driver-side).
+        ``history_n`` values matter, so only that tail of the sorted
+        list ships (avoids shipping whole batches driver-side) — except
+        for ruled keys, whose whole ordered sequence comes back in
+        ``d_seq`` for per-record trigger evaluation. Ruled keys are few
+        (one per configured triggered cmd).
 
         NULL values are non-measurements (the reference's RealVal only
         updates on a parsed double) and are dropped up front: without
@@ -100,26 +146,9 @@ class ValuesStore:
         and a mixed batch whose latest-ts value is NULL overwrites
         last/history with None.
         """
-        df = df.filter(F.col(value).isNotNull())
-        packed = F.array_sort(
-            F.collect_list(F.struct(F.col(ts).alias("t"), F.col(value).alias("v")))
-        )
-        # dynamic start: slice(-n) on an array shorter than n is empty,
-        # so clamp to -size when the batch holds fewer than n values
-        tail = F.slice(
-            packed, F.greatest(F.lit(-self.history_n), -F.size(packed)), F.lit(self.history_n)
-        )
-        return df.groupBy(
-            F.col(group).alias("group"), F.col(name).alias("name")
-        ).agg(
-            F.max_by(F.col(value), F.col(ts)).alias("d_last"),
-            F.min(value).alias("d_min"),
-            F.max(value).alias("d_max"),
-            F.count(value).alias("d_count"),
-            F.sum(value).alias("d_sum"),
-            F.max(ts).alias("d_ts"),
-            F.transform(tail, lambda s: s["v"]).alias("d_tail"),
-        )
+        sc = df.sparkSession.sparkContext
+        present, keys, aggs = self._aggregation(sc, (group, name, value, ts))
+        return df.filter(present).groupBy(*keys).agg(*aggs)
 
     def merge_batch(self, batch_df: DataFrame, **cols) -> None:
         """foreachBatch body: merge per-key deltas into running state,
@@ -128,47 +157,10 @@ class ValuesStore:
         crosses a threshold and returns WITHIN one batch still fires,
         and 'changed' fires once per change, not once per batch).
 
-        Ruled keys are few (one per configured triggered cmd), so only
-        THEIR full ordered value sequences come back to the driver —
-        every other key still reduces to one delta row distributedly."""
-        ruled = {(r.group, r.name) for r in self.rules}
-        group = cols.get("group", "group")
-        name = cols.get("name", "name")
-        value = cols.get("value", "value")
-        ts = cols.get("ts", "ts")
-        seqs: dict[tuple[str, str], list[float]] = {}
-        persisted = False
-        if ruled:
-            # two jobs consume this batch (the ruled-key sequences and
-            # the per-key deltas) — persist so the micro-batch is
-            # scanned once, not recomputed per job
-            try:
-                batch_df.persist()
-                persisted = True
-            except Exception:
-                pass  # e.g. a plan that disallows caching: correctness unaffected
-            key_expr = F.struct(F.col(group).alias("g"), F.col(name).alias("n"))
-            wanted = [F.struct(F.lit(g).alias("g"), F.lit(n).alias("n")) for g, n in sorted(ruled)]
-            seq_rows = (
-                batch_df.filter(key_expr.isin(*wanted) & F.col(value).isNotNull())
-                .groupBy(F.col(group).alias("group"), F.col(name).alias("name"))
-                .agg(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct(F.col(ts).alias("t"), F.col(value).alias("v")))
-                        ),
-                        lambda s: s["v"],
-                    ).alias("vals")
-                )
-                .collect()
-            )
-            seqs = {(r["group"], r["name"]): list(r["vals"]) for r in seq_rows}
-        try:
-            delta_rows = self.batch_deltas(batch_df, **cols).collect()
-        finally:
-            if persisted:
-                batch_df.unpersist()
-        for row in delta_rows:
+        One aggregation per batch, one row per key; ruled keys carry
+        their batch sequence."""
+        ruled = bool(self.rules)
+        for row in self.batch_deltas(batch_df, **cols).collect():
             key = (row["group"], row["name"])
             st = self.state.setdefault(key, _KeyState())
             prev = st.last
@@ -180,8 +172,9 @@ class ValuesStore:
             st.last_ts = row["d_ts"]
             pre_hist = list(st.history)
             st.history = (st.history + list(row["d_tail"]))[-self.history_n :]
-            if key in seqs:
-                self._eval_rules_seq(key, prev, seqs[key], pre_hist)
+            seq = row["d_seq"] if ruled else None
+            if seq is not None:
+                self._eval_rules_seq(key, prev, list(seq), pre_hist)
         if len(self.state) > self.max_keys:
             raise RuntimeError(
                 f"ValuesStore key cardinality {len(self.state)} exceeds max_keys="

@@ -5,8 +5,10 @@
 #   scripts/quick_verify.sh             # full-catalog loop, ~6 min
 #   scripts/quick_verify.sh q1 q2 ...   # subset loop, <5 min
 #
-# Leg 0 — harness: the benchmark's and bench.py's own Spark-free tests
-#   (seconds), so a broken benchmark or streaming harness surfaces first.
+# Leg 0 — harness: the benchmark's and bench.py's own Spark-free tests,
+#   and the AST-only driver-collect guard (seconds), so a broken
+#   benchmark or streaming harness, or a new driver-side collect on the
+#   merge path, surfaces first.
 # Leg 1 — correctness: scripts/check_oracle.py (the judge-replica
 #   Spark-vs-DuckDB gate at sf0.01; prints per-query wall seconds, so
 #   gross perf regressions surface here too). Subset names are passed
@@ -22,6 +24,6 @@
 # and is run once at round close.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-python3 -m pytest perfbench/tests tests/test_bench_harness.py -q
+python3 -m pytest perfbench/tests tests/test_bench_harness.py tests/test_collect_guard.py -q
 python scripts/check_oracle.py "$@"
 python bench.py --quick "$@"

@@ -18,7 +18,8 @@ CALLS = {"collect", "toPandas", "toLocalIterator"}
 
 # (relative file, enclosing function) -> why the collect is bounded
 ALLOWED = {
-    # per-batch rtval deltas: one row per ruled key, #keys is config-bounded
+    # per-batch rtval deltas: one row per key; ruled keys carry their
+    # batch sequence. #keys is config-bounded (max_keys)
     ("streaming/values_store.py", "merge_batch"),
     ("streaming/values_store.py", "merge_text_batch"),
     # geofence transitions + boundary rows: O(#crossings + #partitions)

@@ -397,6 +397,159 @@ class TestTriggerBatchInvariance:
             assert log == expect, f"trial {trial}: seq={values}"
 
 
+class TestFusedMerge:
+    """The values-store merge is one aggregation per batch: each key's
+    deltas, plus the ordered batch sequence for ruled keys."""
+
+    SCHEMA = "group string, name string, value double, ts double"
+    # (group, name, kind, comparison)
+    RULES = [
+        ("g", "a", "comparison", "above 50"),
+        ("g", "a", "changed", None),
+        ("g", "b", "always", None),
+        ("g", "d", "changed", None),
+        ("g", "d", "comparison", "below 5"),
+    ]
+    # rows out of ts order; NULL readings; 'a' crosses 50 and clears
+    # inside batch 0 and again in batch 1; ruled 'd' is absent from
+    # batch 1; 'c' has no rule and is all-NULL in batch 2
+    BATCHES = [
+        [
+            ("g", "a", 60.0, 2.0), ("g", "a", 40.0, 1.0), ("g", "a", 30.0, 3.0),
+            ("g", "a", None, 4.0), ("g", "a", 70.0, 5.0), ("g", "b", 1.0, 1.0),
+            ("g", "b", 1.0, 2.0), ("g", "c", 9.0, 1.0), ("g", "d", 4.0, 1.0),
+            ("g", "d", 6.0, 2.0),
+        ],
+        [
+            ("g", "a", 70.0, 7.0), ("g", "a", 20.0, 6.0), ("g", "a", 55.0, 8.0),
+            ("g", "c", None, 2.0), ("g", "c", 3.0, 3.0), ("g", "b", None, 3.0),
+        ],
+        [
+            ("g", "d", 6.0, 3.0), ("g", "d", 2.0, 4.0), ("g", "a", 51.0, 9.0),
+            ("g", "c", None, 4.0), ("g", "b", 8.0, 5.0),
+        ],
+    ]
+
+    def _store(self, history_n=3):
+        from dcafs_spark.streaming.values_store import TriggerRule, ValuesStore
+
+        store = ValuesStore(history_n=history_n)
+        for g, n, kind, comp in self.RULES:
+            store.add_rule(TriggerRule(g, n, kind, comparison=comp))
+        return store
+
+    @classmethod
+    def _replay(cls, history_n):
+        """Pure-Python replay: per batch, each key's non-NULL values in
+        ts order, every rule of the key evaluated per value."""
+        import math
+        import statistics
+
+        from dcafs_spark.functions.compare import compile_compare_py
+
+        rules = [
+            (g, n, kind, compile_compare_py(c) if c else None) for g, n, kind, c in cls.RULES
+        ]
+        armed = [False] * len(rules)
+        state: dict = {}
+        log: list = []
+        for batch in cls.BATCHES:
+            for key in sorted({(g, n) for g, n, _v, _t in batch}):
+                vals = sorted((t, v) for g, n, v, t in batch if (g, n) == key and v is not None)
+                if not vals:
+                    continue
+                st = state.setdefault(
+                    key, {"last": None, "min": math.inf, "max": -math.inf, "count": 0,
+                          "total": 0.0, "hist": [], "ts": None},
+                )
+                for t, v in vals:
+                    for i, (g, n, kind, check) in enumerate(rules):
+                        if (g, n) != key:
+                            continue
+                        if kind == "always" or (kind == "changed" and st["last"] != v):
+                            log.append((g, n, kind, v))
+                        elif kind == "comparison":
+                            if check(v) and not armed[i]:
+                                armed[i] = True
+                                log.append((g, n, kind, v))
+                            elif not check(v):
+                                armed[i] = False
+                    st["last"], st["ts"] = v, t
+                    st["min"], st["max"] = min(st["min"], v), max(st["max"], v)
+                    st["count"] += 1
+                    st["total"] += v
+                    st["hist"] = (st["hist"] + [v])[-history_n:]
+        snap = []
+        for (g, n), st in sorted(state.items()):
+            hist = st["hist"]
+            full = len(hist) >= history_n
+            snap.append(
+                {
+                    "group": g,
+                    "name": n,
+                    "last_value": st["last"],
+                    "min_value": st["min"],
+                    "max_value": st["max"],
+                    "avg_value": round(st["total"] / st["count"], 3),
+                    "hist_avg": round(statistics.fmean(hist), 3),
+                    "hist_stdev": statistics.stdev(hist) if full and len(hist) > 1 else None,
+                    "n_updates": st["count"],
+                    "last_ts": st["ts"],
+                }
+            )
+        return snap, log
+
+    @staticmethod
+    def _by_key(log):
+        out: dict = {}
+        for entry in log:
+            out.setdefault(entry[:2], []).append(entry)
+        return out
+
+    def test_snapshot_and_fires_match_replay(self, spark):
+        store = self._store()
+        for batch in self.BATCHES:
+            store.merge_batch(spark.createDataFrame(batch, self.SCHEMA))
+        snap, log = self._replay(history_n=3)
+        got = store.snapshot()
+        assert [(r["group"], r["name"]) for r in got] == [(r["group"], r["name"]) for r in snap]
+        for g, e in zip(got, snap):
+            assert g == pytest.approx(e)
+        # keys merge in whatever order the aggregation returns them, so
+        # the log is compared key by key, in order within each key
+        assert self._by_key(store.fired_log) == self._by_key(log)
+        # the within-batch crossings are in the corpus
+        assert [v for _g, _n, k, v in store.fired_log if k == "comparison" and _n == "a"] == [60.0, 70.0, 70.0]
+
+    def test_merge_runs_the_jobs_of_one_aggregation(self, spark):
+        sc = spark.sparkContext
+        store = self._store()
+        df = spark.createDataFrame(self.BATCHES[0], self.SCHEMA)
+
+        def jobs(group, fn):
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        merged = jobs("fused_merge", lambda: store.merge_batch(df))
+        bare = jobs("fused_bare", lambda: store.batch_deltas(df).collect())
+        assert merged == bare >= 1
+        assert store.fired_log  # the rules were live during the merge
+
+    def test_rule_added_between_batches_fires(self, spark):
+        from dcafs_spark.streaming.values_store import TriggerRule, ValuesStore
+
+        store = ValuesStore()
+        store.merge_batch(spark.createDataFrame([("g", "a", 60.0, 1.0)], self.SCHEMA))
+        assert store.fired_log == []
+        store.add_rule(TriggerRule("g", "a", "comparison", comparison="above 50"))
+        store.merge_batch(spark.createDataFrame([("g", "a", 65.0, 2.0)], self.SCHEMA))
+        assert store.fired_log == [("g", "a", "comparison", 65.0)]
+
+
 class TestStoreParityDriverVsStateStore:
     """The driver-side ValuesStore and the applyInPandasWithState
     variant advertise the SAME aggregation contract — pin it with a
