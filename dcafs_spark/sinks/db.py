@@ -11,10 +11,11 @@ Spark-first mapping:
     prepared-statement batches in parallel, replacing the reference's
     single flush worker. Flush `age` ≈ the streaming trigger interval.
   * SQLite is a single-writer file DB → a driver-side writer using
-    Python's stdlib sqlite3 over Arrow batches. Used for the
-    reference's default store-to-sqlite flow and for tests (no JDBC
-    driver jar needed). Rows stream via toLocalIterator so the driver
-    never holds the full batch.
+    Python's stdlib sqlite3. Used for the reference's default
+    store-to-sqlite flow and for tests (no JDBC driver jar needed).
+    Each micro-batch arrives as one Arrow table (`df.toArrow()`, one
+    Spark job for any partition count) and is bound from its columns
+    in 10k-row chunks.
   * failed-insert retention (`SqlTable.clearRecords:484-521`) → the
     SQLite writer collects constraint-violating rows into a
     dead-letter list instead of dropping the batch.
@@ -28,6 +29,25 @@ import sqlite3
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    DataType,
+    DateType,
+    DecimalType,
+    FractionalType,
+    IntegralType,
+    MapType,
+    StringType,
+    TimestampNTZType,
+    TimestampType,
+)
+
+# rows per executemany (and per savepoint): also the most rows whose
+# Python objects the SQLite writer holds at once
+FLUSH_ROWS = 10000
 
 
 def _adapt(v):
@@ -49,11 +69,41 @@ def _adapt(v):
         return str(v)
     return v
 
+
+# the types `_adapt` rewrites; every other column binds as Arrow gives it
+_ADAPTED_TYPES = (DecimalType, TimestampType, TimestampNTZType, DateType, BooleanType, ArrayType, MapType)
+
+
+def _column_converter(dt: DataType):
+    """Arrow column → list of sqlite3-bindable values, chosen once per
+    column from its Spark type. Values equal `_adapt` over the Row
+    objects a row-wise collect gives: nested and temporal values first
+    take their Row forms (a UTC timestamp becomes a naive local
+    datetime, a map's list of pairs a dict, a struct a Row) through
+    the converter Spark itself uses to build Rows from Arrow."""
+    # numpy's tolist is many times faster than Arrow's to_pylist
+    if isinstance(dt, (StringType, BinaryType)):  # object array, None for null
+        return lambda col: col.to_numpy().tolist()
+    if isinstance(dt, (IntegralType, FractionalType)) and not isinstance(dt, DecimalType):
+        # numpy would turn a null into NaN
+        return lambda col: col.to_pylist() if col.null_count else col.to_numpy().tolist()
+    row_form = ArrowTableToRowsConversion._create_converter(dt, none_on_identity=True)
+    if isinstance(dt, _ADAPTED_TYPES):
+        fix = _adapt if row_form is None else (lambda v: _adapt(row_form(v)))
+    else:
+        fix = row_form
+    if fix is None:
+        return lambda col: col.to_pylist()
+    return lambda col: [fix(v) for v in col.to_pylist()]
+
+
 _SQLITE_TYPES = {  # SqlTable.java:661-669 sqlite map
     "int": "INTEGER",
     "bigint": "INTEGER",
     "smallint": "INTEGER",
+    "tinyint": "INTEGER",
     "double": "REAL",
+    "decimal": "REAL",  # what `_adapt` binds a Decimal as
     "float": "REAL",
     "string": "TEXT",
     "boolean": "INTEGER",
@@ -66,7 +116,9 @@ _SERVER_TYPES = {  # generic server map (:399-407): real timestamps, not TEXT
     "int": "INTEGER",
     "bigint": "BIGINT",
     "smallint": "SMALLINT",
+    "tinyint": "SMALLINT",  # no TINYINT in standard SQL or PostgreSQL
     "double": "DOUBLE PRECISION",
+    "decimal": "NUMERIC({p},{s})",
     "float": "REAL",
     "string": "VARCHAR",
     "boolean": "BOOLEAN",
@@ -84,7 +136,9 @@ _POSTGRES_TYPES = {  # SQLDB.java:84-95 POSTGRESQL; timestamptz per SqlTable.jav
 
 _MYSQL_TYPES = {  # SQLDB.java:84-95 MYSQL/MARIADB
     **_SERVER_TYPES,
+    "tinyint": "TINYINT",
     "double": "DOUBLE",
+    "decimal": "DECIMAL({p},{s})",
     "float": "FLOAT",
     "string": "TEXT",
     "boolean": "TINYINT(1)",
@@ -94,7 +148,9 @@ _MYSQL_TYPES = {  # SQLDB.java:84-95 MYSQL/MARIADB
 
 _MSSQL_TYPES = {  # SQLDB.java:84-95 MSSQL
     **_SERVER_TYPES,
+    "tinyint": "SMALLINT",  # T-SQL TINYINT is unsigned 0-255
     "double": "FLOAT",
+    "decimal": "DECIMAL({p},{s})",
     "float": "REAL",
     "string": "NVARCHAR(MAX)",
     "boolean": "BIT",
@@ -138,9 +194,10 @@ def ddl_for(
     types = _DIALECT_TYPES.get(dialect, _SERVER_TYPES)
     cols = []
     for f in df.schema.fields:
-        t = f.dataType.simpleString()
-        base = t.split("(")[0]
-        cols.append(f"{_quote_ident(f.name, dialect)} {types.get(base, 'TEXT')}")
+        sql_type = types.get(f.dataType.simpleString().split("(")[0], "TEXT")
+        if isinstance(f.dataType, DecimalType):
+            sql_type = sql_type.format(p=f.dataType.precision, s=f.dataType.scale)
+        cols.append(f"{_quote_ident(f.name, dialect)} {sql_type}")
     if unique_cols:
         uq = ", ".join(_quote_ident(c, dialect) for c in unique_cols)
         cols.append(f"UNIQUE ({uq})")
@@ -148,7 +205,8 @@ def ddl_for(
     if not if_not_exists:
         return body
     if dialect == "mssql":  # T-SQL has no IF NOT EXISTS clause
-        return f"IF OBJECT_ID(N'{table}', N'U') IS NULL {body}"
+        name = table.replace("'", "''")
+        return f"IF OBJECT_ID(N'{name}', N'U') IS NULL {body}"
     return body.replace("CREATE TABLE ", "CREATE TABLE IF NOT EXISTS ", 1)
 
 
@@ -230,22 +288,30 @@ class SqliteSink:
     dead_letter: list[tuple] = field(default_factory=list)
 
     def write_batch(self, df: DataFrame, batch_id: int = 0) -> int:
-        cols = df.columns
-        placeholders = ",".join("?" for _ in cols)
+        """Insert (or upsert) one micro-batch; returns the rows stored.
+
+        The batch is pulled with one `df.toArrow()` — one Spark job for
+        any partition count — so the driver holds the whole micro-batch
+        as Arrow columns (a file source bounds it with
+        `maxFilesPerTrigger`), but builds Python row tuples for at most
+        `FLUSH_ROWS` rows at a time. Rows are stored in frame order."""
+        fields = df.schema.fields
         # quote identifiers exactly like ddl_for: a column named a SQL
-        # keyword ('order', 'group') or containing spaces must not break
-        # the INSERT and silently dead-letter every row
-        qcols = ", ".join('"' + c.replace('"', '""') + '"' for c in cols)
-        qtable = '"' + self.table.replace('"', '""') + '"'
-        insert = f"INSERT INTO {qtable} ({qcols}) VALUES ({placeholders})"
+        # keyword ('order', 'group') or containing spaces or quotes must
+        # not break the INSERT and silently dead-letter every row
+        q = {f.name: _quote_ident(f.name, "sqlite") for f in fields}
+        placeholders = ",".join("?" for _ in fields)
+        qtable = _quote_ident(self.table, "sqlite")
+        insert = f"INSERT INTO {qtable} ({', '.join(q.values())}) VALUES ({placeholders})"
         if self.key_cols:
-            sets = ", ".join(f'"{c}" = excluded."{c}"' for c in cols if c not in self.key_cols)
-            keys = ", ".join(f'"{c}"' for c in self.key_cols)
+            sets = ", ".join(f"{q[c]} = excluded.{q[c]}" for c in q if c not in self.key_cols)
+            keys = ", ".join(_quote_ident(c, "sqlite") for c in self.key_cols)
             # all-columns-are-key (pure dedup table): DO UPDATE SET with
             # an empty assignment list is a syntax error that would
             # dead-letter even valid first-time inserts
             action = f"DO UPDATE SET {sets}" if sets else "DO NOTHING"
             insert += f" ON CONFLICT ({keys}) {action}"
+        convs = [_column_converter(f.dataType) for f in fields]
         con = sqlite3.connect(self.db_path)
         try:
             if self.create:
@@ -254,16 +320,14 @@ class SqliteSink:
                 # EVERY row into dead_letter (silent total data loss)
                 con.execute(ddl_for(df, self.table, "sqlite", unique_cols=self.key_cols))
             cur = con.cursor()
+            table = df.toArrow()
             n = 0
-            buf: list[tuple] = []
-            # toLocalIterator: one partition in driver memory at a time
-            for row in df.toLocalIterator():
-                buf.append(tuple(_adapt(v) for v in row))
-                if len(buf) >= 10000:
-                    n += self._flush(cur, insert, buf)
-                    buf = []
-            if buf:
-                n += self._flush(cur, insert, buf)
+            # zero-copy slices: exactly FLUSH_ROWS rows per flush whatever
+            # the partition boundaries inside the table
+            for start in range(0, table.num_rows, FLUSH_ROWS):
+                chunk = table.slice(start, FLUSH_ROWS)
+                values = [conv(col) for conv, col in zip(convs, chunk.columns)]
+                n += self._flush(cur, insert, list(zip(*values)))
             con.commit()
             return n
         finally:

@@ -8,7 +8,8 @@
 # Leg 0 — harness: the benchmark's and bench.py's own Spark-free tests,
 #   and the AST-only driver-collect guard (seconds), so a broken
 #   benchmark or streaming harness, or a new driver-side collect on the
-#   merge path, surfaces first.
+#   merge path, surfaces first. Then the SQLite sink's tests (with
+#   Spark, ~15 s), so a store-step regression surfaces before leg 1.
 # Leg 1 — correctness: scripts/check_oracle.py (the judge-replica
 #   Spark-vs-DuckDB gate at sf0.01; prints per-query wall seconds, so
 #   gross perf regressions surface here too). Subset names are passed
@@ -25,5 +26,6 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 python3 -m pytest perfbench/tests tests/test_bench_harness.py tests/test_collect_guard.py -q
+python3 -m pytest "tests/test_pipeline_streaming.py::TestDbSinks" tests/test_db_exactly_once.py -q
 python scripts/check_oracle.py "$@"
 python bench.py --quick "$@"

@@ -1,8 +1,8 @@
 """Regression guard: no driver-side materialization creeps into query paths.
 
-`.collect()` / `.toPandas()` / `.toLocalIterator()` in an operator or
-query path means the operator isn't distributed — at 100 TB it's a
-driver OOM or a serial bottleneck. The engine's only legitimate uses
+`.collect()` / `.toPandas()` / `.toLocalIterator()` / `.toArrow()` in an
+operator or query path means the operator isn't distributed — at 100 TB
+it's a driver OOM or a serial bottleneck. The engine's only legitimate uses
 are bounded, reviewed driver-side reductions, each allowlisted below
 with why it's bounded. Adding a new collect anywhere else in
 `dcafs_spark/` turns this test red; extend the allowlist only with a
@@ -14,7 +14,7 @@ import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "dcafs_spark"
 
-CALLS = {"collect", "toPandas", "toLocalIterator"}
+CALLS = {"collect", "toPandas", "toLocalIterator", "toArrow"}
 
 # (relative file, enclosing function) -> why the collect is bounded
 ALLOWED = {
@@ -35,7 +35,9 @@ ALLOWED = {
     # stratum — strata are languages/sources, a bounded domain; callers
     # with immutable inputs cache via the stratum_counts= seam
     ("operators/sampling.py", "compute_stratum_counts"),
-    # JDBC sink ships rows out by design; toLocalIterator streams batches
+    # SQLite sink ships rows out by design: one toArrow per micro-batch,
+    # which the source's maxFilesPerTrigger bounds; Python rows are
+    # built FLUSH_ROWS (10k) at a time
     ("sinks/db.py", "write_batch"),
     # telnet session push: limit(max_push_lines) caps the transfer — an
     # interactive terminal reads a bounded window, never the batch

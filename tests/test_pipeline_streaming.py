@@ -8,7 +8,8 @@ import glob
 import os
 import sqlite3
 import time
-from datetime import datetime, timezone
+from datetime import date, datetime, timezone
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -346,18 +347,143 @@ class TestDbSinks:
     def test_dialect_ddl_maps(self, spark):
         """The five reference dialects (SQLDB.java:84-95) + quoting."""
         df = spark.createDataFrame(
-            [(1, "a", 2.5, True, datetime(2026, 1, 1, tzinfo=timezone.utc))],
-            "id int, name string, v double, ok boolean, at timestamp",
+            [(1, "a", 2.5, True, datetime(2026, 1, 1, tzinfo=timezone.utc), 7, Decimal("1.25"))],
+            "id int, name string, v double, ok boolean, at timestamp, tiny tinyint, dec decimal(10,2)",
         )
         my = ddl_for(df, "order", "mysql")
         assert my.startswith("CREATE TABLE IF NOT EXISTS `order`")
         assert "`v` DOUBLE" in my and "`ok` TINYINT(1)" in my and "`at` DATETIME(6)" in my
+        assert "`tiny` TINYINT," in my and "`dec` DECIMAL(10,2)" in my
         pg = ddl_for(df, "t", "postgresql")
         assert '"at" TIMESTAMPTZ' in pg and '"name" TEXT' in pg
+        assert '"tiny" SMALLINT' in pg and '"dec" NUMERIC(10,2)' in pg
+        sv = ddl_for(df, "t", "server")
+        assert '"tiny" SMALLINT' in sv and '"dec" NUMERIC(10,2)' in sv
         ms = ddl_for(df, "t", "mssql")
         assert ms.startswith("IF OBJECT_ID(N't', N'U') IS NULL CREATE TABLE [t]")
         assert "[v] FLOAT" in ms and "[ok] BIT" in ms and "[name] NVARCHAR(MAX)" in ms
+        assert "[tiny] SMALLINT" in ms and "[dec] DECIMAL(10,2)" in ms
         assert ddl_for(df, "t", "mariadb") == ddl_for(df, "t", "mysql")
+        lite = ddl_for(df, "t", "sqlite")
+        assert '"tiny" INTEGER' in lite and '"dec" REAL' in lite
+        # the existence guard is a string literal: a quote in the name is doubled
+        assert ddl_for(df, "o'brien", "mssql").startswith(
+            "IF OBJECT_ID(N'o''brien', N'U') IS NULL CREATE TABLE [o'brien]"
+        )
+
+    def test_upsert_quotes_identifiers(self, spark, tmp_path):
+        """Key and value columns whose names hold a double quote: the
+        ON CONFLICT clause must escape them like the INSERT does, or
+        every row is a syntax error in the dead letter."""
+        db = str(tmp_path / "q.db")
+        sink = SqliteSink(db, 'my"t', key_cols=['k"ey'])
+        cols = 'k"ey', 'v"al'
+        df1 = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]).toDF(*cols)
+        df2 = spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"]).toDF(*cols)
+        assert sink.write_batch(df1) == 2
+        assert sink.write_batch(df2) == 2
+        assert sink.dead_letter == []
+        con = sqlite3.connect(db)
+        rows = con.execute('SELECT * FROM "my""t" ORDER BY 1').fetchall()
+        con.close()
+        assert rows == [(1, "a"), (2, "B"), (3, "c")]
+
+    def test_sqlite_every_adapted_type(self, spark, tmp_path):
+        """Each type `_adapt` rewrites plus an all-NULL row, from a
+        2-partition frame: stored values, their SQLite storage classes
+        and the dead-letter tuples are those of `_adapt` over the Rows a
+        row-wise collect gives."""
+        from dcafs_spark.sinks.db import _adapt
+
+        # a naive timestamp is local time both ways, so the stored text
+        # does not depend on the host's time zone; 2**53 + 1 has no
+        # exact double, so a bigint must not pass through float
+        full = (1, 7, -2, 2**53 + 1, 0.5, 2.25, "a", b"\x01\x02", Decimal("1.25"),
+                datetime(2026, 1, 2, 3, 4, 5, 123456), datetime(2026, 1, 2, 3, 4, 5),
+                date(2026, 1, 2), True, [1, 2], {"k": 1.5})
+        schema = (
+            "id int, tiny tinyint, small smallint, big bigint, f float, d double, s string, b binary, "
+            "dec decimal(10,2), at timestamp, ntz timestamp_ntz, day date, ok boolean, "
+            "arr array<int>, m map<string,double>"
+        )
+        df = spark.createDataFrame(spark.sparkContext.parallelize([full, (None,) * 15], 2), schema)
+        assert df.rdd.getNumPartitions() == 2
+        db = str(tmp_path / "types.db")
+        sink = SqliteSink(db, "t")
+        assert sink.write_batch(df) == 2
+        con = sqlite3.connect(db)
+        typeof = ", ".join(f'typeof("{c}")' for c in df.columns)
+        got = con.execute(f"SELECT *, {typeof} FROM t ORDER BY id").fetchall()
+        con.close()
+        assert got == [
+            (None,) * 15 + ("null",) * 15,
+            (1, 7, -2, 2**53 + 1, 0.5, 2.25, "a", b"\x01\x02", 1.25, "2026-01-02 03:04:05.123456",
+             "2026-01-02 03:04:05", "2026-01-02", 1, "[1, 2]", "{'k': 1.5}",
+             "integer", "integer", "integer", "integer", "real", "real", "text", "blob", "real",
+             "text", "text", "text", "integer", "text", "text"),
+        ]
+        row_path = [tuple(_adapt(v) for v in r) for r in df.collect() if r.id == 1]
+        assert [got[1][:15]] == row_path
+        # a conflicting replay dead-letters the keyed row as `_adapt` gives
+        # it; the NULL-keyed row never conflicts under UNIQUE
+        db2 = str(tmp_path / "types_unique.db")
+        con = sqlite3.connect(db2)
+        con.execute(ddl_for(df, "t", "sqlite", unique_cols=["id"]))
+        con.commit()
+        con.close()
+        sink2 = SqliteSink(db2, "t", create=False)
+        assert sink2.write_batch(df) == 2
+        assert sink2.write_batch(df) == 1
+        assert sink2.dead_letter == row_path
+
+    @staticmethod
+    def _descending(spark, n):
+        # frame order is descending id, so sorting cannot pass for it
+        return spark.range(0, n, 1, 3).selectExpr(f"{n - 1} - id AS id", "concat('v', id) AS body")
+
+    def test_sqlite_one_job_frame_order(self, spark, tmp_path, monkeypatch):
+        """More than one flush of rows in 3 partitions: one Spark job
+        pulls the whole batch, flushes are 10k rows as before, and rows
+        land in frame order."""
+        sc = spark.sparkContext
+        df = self._descending(spark, 25000)
+        assert df.rdd.getNumPartitions() == 3
+        sizes = []
+        real_flush = SqliteSink._flush
+
+        def counting_flush(self, cur, insert, rows):
+            sizes.append(len(rows))
+            return real_flush(self, cur, insert, rows)
+
+        monkeypatch.setattr(SqliteSink, "_flush", counting_flush)
+        db = str(tmp_path / "big.db")
+        sc.setJobGroup("sqlite_sink_write", "sqlite_sink_write")
+        try:
+            n = SqliteSink(db, "t").write_batch(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("sqlite_sink_write")) == 1
+        assert n == 25000 and sizes == [10000, 10000, 5000]
+        con = sqlite3.connect(db)
+        ids = [r[0] for r in con.execute("SELECT id FROM t ORDER BY rowid")]
+        con.close()
+        assert ids == list(range(24999, -1, -1))
+
+    def test_sqlite_dead_letter_in_second_chunk(self, spark, tmp_path):
+        db = str(tmp_path / "dl.db")
+        con = sqlite3.connect(db)
+        con.execute("CREATE TABLE t (id INTEGER PRIMARY KEY, body TEXT)")
+        con.execute("INSERT INTO t VALUES (12345, 'kept')")
+        con.commit()
+        con.close()
+        sink = SqliteSink(db, "t", create=False)
+        # frame position 12654 of 25000: the second 10k chunk
+        assert sink.write_batch(self._descending(spark, 25000)) == 24999
+        assert sink.dead_letter == [(12345, "v12654")]
+        con = sqlite3.connect(db)
+        assert con.execute("SELECT count(*) FROM t").fetchone() == (25000,)
+        assert con.execute("SELECT body FROM t WHERE id = 12345").fetchone() == ("kept",)
+        con.close()
 
     def test_sqlite_dead_letter(self, spark, tmp_path):
         db = str(tmp_path / "t2.db")
